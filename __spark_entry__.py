@@ -28,6 +28,7 @@ from clawrag_spark.operators import stats as S
 from clawrag_spark.operators import textops as X
 from clawrag_spark.operators import webgraph as WG
 from clawrag_spark.operators import webtext as WT
+from clawrag_spark.session import session_artifact
 
 _TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -155,18 +156,12 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # the S15/A7 story: queries probe precomputed postings/doclen/idf
 # instead of re-tokenizing the corpus per query (round-1 verdict: four
 # queries each paid a full corpus scan + explode).
-_BM25_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
+@session_artifact("bm25_index")
 def _bm25_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _BM25_CACHE.get(key)
-    if idx is None:
-        docs = _load(spark, sf_dir, "documents")
-        idx = R.bm25_build_index(docs, "doc_id", "text")
-        for name in ("postings", "doclen", "idf"):
-            idx[name] = idx[name].persist()
-        _BM25_CACHE[key] = idx
+    docs = _load(spark, sf_dir, "documents")
+    idx = R.bm25_build_index(docs, "doc_id", "text")
+    for name in ("postings", "doclen", "idf"):
+        idx[name] = idx[name].persist()
     return idx
 
 
@@ -174,16 +169,13 @@ def _bm25_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.bm25_score_index(_bm25_index(spark, sf_dir), "doc_id", QUERY_TERMS)
 
 
+@session_artifact("impact_index")
 def _impact_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Impact-ordered postings derived once from the cached BM25 index
     (same persisted-artifact story: quantization is index-build work,
     queries probe the integer codes)."""
-    idx = _bm25_index(spark, sf_dir)
-    if "impacts" not in idx:
-        imp = R.build_impact_index(idx, "doc_id")
-        idx["impacts"] = imp["impacts"].persist()
-        idx["term_max"] = imp["term_max"]
-    return {"impacts": idx["impacts"], "term_max": idx["term_max"]}
+    imp = R.build_impact_index(_bm25_index(spark, sf_dir), "doc_id")
+    return {"impacts": imp["impacts"].persist(), "term_max": imp["term_max"]}
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -726,13 +718,16 @@ def q_oph_jaccard(spark, sf_dir):
     )
 
 
-def _jaccard_verified_pairs(docs, shingles=None):
-    """MinHash-band candidates (r=2) → exact 3-gram Jaccard verify >0.8.
-    Shared by q_ngram_jaccard and the curation funnel's dedup stage.
+def _jaccard_verified_pairs(docs, shingles):
+    """MinHash-band candidates (r=2) → exact 3-gram Jaccard verify >0.8,
+    returned persisted and materialized.  Builds the session's
+    ``jaccard_pairs`` artifact (q_ngram_jaccard and the curation
+    funnel's dedup stage).
 
-    Accepts the session-cached shingle frame via ``shingles`` (see
-    ``_shingles_cached``) so the tokenize+explode scan is shared with
-    every other consumer in the session.
+    ``shingles`` is ``DS.shingle_rows(docs, "doc_id", "text")`` — the
+    session-cached frame (see ``_shingles_cached``) for the corpus
+    build, so the tokenize+explode scan is shared with every other
+    consumer in the session.
 
     The verify is HASH-ROW based, never array-based: grams explode to
     (doc, md5(gram)) rows, pre-filtered to docs that appear in any
@@ -745,23 +740,11 @@ def _jaccard_verified_pairs(docs, shingles=None):
     inter/(|A|+|B|−inter) over the same distinct-gram counts, so the
     value (and the DuckDB oracle) is bit-identical to the array path.
     """
-    # The tokenize+shingle explode is the expensive scan-side subtree
-    # and EVERY downstream consumer needs it (both sides of the band
-    # self-join, and the gram hashes).  Persist it and materialize
-    # EAGERLY: a lazy persist referenced by concurrently-scheduled
-    # stages recomputes the subtree under the cache-miss race — the
-    # whole query measured 25 s cold with lazy persists on cand/gh vs
-    # ~5 s with one eager shingle cache.  Caches are session-scoped
-    # like the funnel's stage caches.
-    if shingles is None:
-        shingles = DS.shingle_rows(docs, "doc_id", "text").persist()
-        shingles.count()  # materialize before anything forks the plan
-    sh = shingles
     # r=2 rows per band: candidate prob 1-(1-j²)⁴ — ≥98% recall at the
     # 0.8 verify threshold, but random low-Jaccard pairs (rampant in the
     # tiny-vocab corpus) collapse from ~42k candidates to a few hundred.
     cand = DS.minhash_candidate_pairs(
-        docs, "doc_id", "text", n_bands=4, rows_per_band=2, shingles=sh
+        docs, "doc_id", "text", n_bands=4, rows_per_band=2, shingles=shingles
     ).persist()
     cand.count()  # feeds the doc-set semi-join and both intersection joins
     # only docs that appear in some candidate pair matter
@@ -775,7 +758,7 @@ def _jaccard_verified_pairs(docs, shingles=None):
     # deriving the gram hashes from the SAME cached shingle rows is
     # value-identical to the old per-doc array build.
     gh = (
-        sh.join(cand_docs, "doc_id", "left_semi")
+        shingles.join(cand_docs, "doc_id", "left_semi")
         .select("doc_id", F.md5("shingle").alias("gh"))
         .distinct()
     ).persist()
@@ -786,7 +769,7 @@ def _jaccard_verified_pairs(docs, shingles=None):
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
+    pairs = (
         inter.join(
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")),
             "doc_a",
@@ -804,47 +787,39 @@ def _jaccard_verified_pairs(docs, shingles=None):
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") > 0.8)
-    )
+    ).persist()
+    pairs.count()  # materialize before any consumer forks the plan
+    cand.unpersist()  # the pair frame is materialized; the candidate
+    gh.unpersist()  # and gram-hash caches have no further consumer
+    return pairs
 
 
-# The corpus-wide verified-pair table is shared by q_ngram_jaccard and
-# the curation funnel.  Explicit (session, sf) memoization: relying on
-# CacheManager plan-canonicalization to dedup two independently built
-# plans is fragile (any analyzed-plan difference silently re-pays the
-# whole shingle+verify scan); a dict hit reuses the SAME persisted
-# frame by construction — the _BM25_CACHE pattern.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: Session-scoped cache of the exploded (doc_id, shingle) frame — the
-#: single most expensive scan-side subtree in the dedup family, needed
-#: by the Jaccard pair build AND the prefix-filter similarity join.
-#: Same memoization rationale as _PAIRS_CACHE.
-_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: Session-scoped exploded (doc_id, shingle) frame — the single most
+#: expensive scan-side subtree in the dedup family, needed by the
+#: Jaccard pair build (both sides of the band self-join, and the gram
+#: hashes) AND the prefix-filter similarity join.  Materialized EAGERLY:
+#: a lazy persist referenced by concurrently-scheduled stages recomputes
+#: the subtree under the cache-miss race (25 s cold vs ~5 s measured).
+@session_artifact("shingles")
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _SHINGLES_CACHE.get(key)
-    if sh is None:
-        sh = DS.shingle_rows(
-            _load(spark, sf_dir, "documents"), "doc_id", "text"
-        ).persist()
-        sh.count()  # materialize before any consumer forks the plan
-        _SHINGLES_CACHE[key] = sh
+    sh = DS.shingle_rows(
+        _load(spark, sf_dir, "documents"), "doc_id", "text"
+    ).persist()
+    sh.count()  # materialize before any consumer forks the plan
     return sh
 
 
+#: The corpus-wide verified-pair table is shared by q_ngram_jaccard and
+#: the curation funnel.  Explicit session memoization: relying on
+#: CacheManager plan-canonicalization to dedup two independently built
+#: plans is fragile (any analyzed-plan difference silently re-pays the
+#: whole shingle+verify scan); a registry hit reuses the SAME persisted
+#: frame by construction.
+@session_artifact("jaccard_pairs")
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = _jaccard_verified_pairs(
-            _load(spark, sf_dir, "documents"),
-            shingles=_shingles_cached(spark, sf_dir),
-        ).persist()
-        pairs.count()  # materialize before any consumer forks the plan
-        _PAIRS_CACHE[key] = pairs
-    return pairs
+    return _jaccard_verified_pairs(
+        _load(spark, sf_dir, "documents"), _shingles_cached(spark, sf_dir)
+    )
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -861,41 +836,37 @@ def q_ngram_jaccard(spark, sf_dir):
     return _jaccard_pairs_cached(spark, sf_dir)
 
 
-#: Session-scoped attribute-sidecar dirs (Dolma pattern: taggers run
-#: once per session, filter sweeps reuse the sidecars).
-_ATTR_CACHE: dict[tuple[str, str], str] = {}
-
-
+#: Session-scoped attribute-sidecar dir (Dolma pattern: taggers run
+#: once per session, filter sweeps reuse the sidecars); releasing the
+#: artifact deletes the directory.
+@session_artifact("attributes")
 def _attributes_dir(spark, sf_dir) -> str:
     import tempfile
 
     from clawrag_spark.attributes import write_attributes
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ATTR_CACHE:
-        tmp = tempfile.mkdtemp(prefix="clawrag_attrs_")
-        docs = _load(spark, sf_dir, "documents")
-        write_attributes(
-            docs,
-            tmp,
-            {
-                "shape": {
-                    "n_tokens": F.size(
-                        F.filter(
-                            F.split(F.lower("text"), "[^a-z0-9]+"),
-                            lambda x: x != F.lit(""),
-                        )
-                    ).cast("long"),
-                    "n_chars": F.length("text").cast("long"),
-                },
-                "langid": {
-                    "lang": F.col("lang"),
-                    "is_en": (F.col("lang") == "en"),
-                },
+    tmp = tempfile.mkdtemp(prefix="clawrag_attrs_")
+    docs = _load(spark, sf_dir, "documents")
+    write_attributes(
+        docs,
+        tmp,
+        {
+            "shape": {
+                "n_tokens": F.size(
+                    F.filter(
+                        F.split(F.lower("text"), "[^a-z0-9]+"),
+                        lambda x: x != F.lit(""),
+                    )
+                ).cast("long"),
+                "n_chars": F.length("text").cast("long"),
             },
-        )
-        _ATTR_CACHE[key] = tmp
-    return _ATTR_CACHE[key]
+            "langid": {
+                "lang": F.col("lang"),
+                "is_en": (F.col("lang") == "en"),
+            },
+        },
+    )
+    return tmp
 
 
 def q_attribute_filter(spark, sf_dir):
@@ -1093,21 +1064,15 @@ def q_dup_ngrams(spark, sf_dir):
 #: directly and `quote_containment` unions the (disjoint-keyspace)
 #: quote slice's distinct rows onto it, so the corpus-wide distinct
 #: shuffle runs once per session.
-_PREFIX_SETS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact("prefix_sets")
 def _prefix_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sets = _PREFIX_SETS_CACHE.get(key)
-    if sets is None:
-        sets = (
-            _shingles_cached(spark, sf_dir)
-            .select(F.col("doc_id").alias("doc"), "shingle")
-            .distinct()
-            .persist()
-        )
-        sets.count()  # materialize before any consumer forks the plan
-        _PREFIX_SETS_CACHE[key] = sets
+    sets = (
+        _shingles_cached(spark, sf_dir)
+        .select(F.col("doc_id").alias("doc"), "shingle")
+        .distinct()
+        .persist()
+    )
+    sets.count()  # materialize before any consumer forks the plan
     return sets
 
 
@@ -2048,20 +2013,14 @@ def q_frontier_caps(spark, sf_dir):
 #: once per session.  Persist preserves content AND partitioning, so
 #: every downstream iteration sees exactly the rows it computed from
 #: scratch before.
-_HOST_EDGES_CACHE: dict[str, DataFrame] = {}
-
-
+@session_artifact("host_edges")
 def _host_edges_cached(spark: SparkSession) -> DataFrame:
-    key = spark.sparkContext.applicationId
-    edges = _HOST_EDGES_CACHE.get(key)
-    if edges is None:
-        _ensure_pipeline_demo(spark)
-        pages = spark.read.parquet(os.path.join(_DEMO_DIR, "pages.parquet"))
-        edges = WG.host_edges(
-            WG.resolve_links(WG.extract_links(pages))
-        ).persist()
-        edges.count()  # materialize before any consumer forks the plan
-        _HOST_EDGES_CACHE[key] = edges
+    _ensure_pipeline_demo(spark)
+    pages = spark.read.parquet(os.path.join(_DEMO_DIR, "pages.parquet"))
+    edges = WG.host_edges(
+        WG.resolve_links(WG.extract_links(pages))
+    ).persist()
+    edges.count()  # materialize before any consumer forks the plan
     return edges
 
 
@@ -2205,19 +2164,13 @@ def q_proximity_rank(spark, sf_dir):
 #: query_clarity) re-tokenized the corpus up to four times per query
 #: chain; every consumer derives integer counts from it, so sharing
 #: the materialized frame is value-identical.
-_DOC_TOKENS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact("doc_tokens")
 def _doc_tokens_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    toks = _DOC_TOKENS_CACHE.get(key)
-    if toks is None:
-        docs = _load(spark, sf_dir, "documents")
-        toks = DS.ensure_parallelism(docs).select(
-            F.col("doc_id"), F.explode(R.sql_tokens(F.col("text"))).alias("term")
-        ).persist()
-        toks.count()  # materialize before any consumer forks the plan
-        _DOC_TOKENS_CACHE[key] = toks
+    docs = _load(spark, sf_dir, "documents")
+    toks = DS.ensure_parallelism(docs).select(
+        F.col("doc_id"), F.explode(R.sql_tokens(F.col("text"))).alias("term")
+    ).persist()
+    toks.count()  # materialize before any consumer forks the plan
     return toks
 
 
@@ -2733,14 +2686,6 @@ def q_anchor_texts(spark, sf_dir):
     return WG.anchor_stats(WG.resolve_links(WG.extract_anchor_texts(pages)))
 
 
-#: Session-scoped shared curation state: the quality-gate survivor ids
-#: and the near-dup CC drop ids are IDENTICAL inputs to
-#: `curation_funnel` and `drop_reasons` (same gate constants, same
-#: survivor-restricted pair table), so the Gopher top-bigram scan and
-#: the connected-components resolution run once per (session, sf).
-_CURATION_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
 def _curation_flag(ids: DataFrame, name: str) -> DataFrame:
     """(doc_id, <name>=1) membership-flag frame for a left join."""
     return ids.withColumn(name, F.lit(1))
@@ -2795,33 +2740,34 @@ def _gopher_frac_ok(col):
     return F.pandas_udf(_gopher_frac_ok_fn, "boolean")(col)
 
 
+#: Session-scoped shared curation state: the quality-gate survivor ids
+#: and the near-dup CC drop ids are IDENTICAL inputs to
+#: `curation_funnel` and `drop_reasons` (same gate constants, same
+#: survivor-restricted pair table), so the Gopher top-bigram scan and
+#: the connected-components resolution run once per (session, sf).
+@session_artifact("curation")
 def _curation_cached(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    shared = _CURATION_CACHE.get(key)
-    if shared is None:
-        docs = DS.ensure_parallelism(_load(spark, sf_dir, "documents"))
-        qual_flag = (F.col("n_chars") >= 100) & _gopher_frac_ok(F.col("text"))
-        qual_ids = docs.filter(qual_flag).select("doc_id").persist()
-        qual_ids.count()  # materialize before any consumer forks
-        pairs = (
-            _jaccard_pairs_cached(spark, sf_dir)
-            .join(
-                qual_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
-            )
-            .join(
-                qual_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
-            )
+    docs = DS.ensure_parallelism(_load(spark, sf_dir, "documents"))
+    qual_flag = (F.col("n_chars") >= 100) & _gopher_frac_ok(F.col("text"))
+    qual_ids = docs.filter(qual_flag).select("doc_id").persist()
+    qual_ids.count()  # materialize before any consumer forks
+    pairs = (
+        _jaccard_pairs_cached(spark, sf_dir)
+        .join(
+            qual_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
         )
-        cc = DS.connected_components(pairs, "doc_a", "doc_b")
-        drop_ids = (
-            cc.filter(F.col("n") != F.col("cluster"))
-            .select(F.col("n").alias("doc_id"))
-            .persist()
+        .join(
+            qual_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
         )
-        drop_ids.count()
-        shared = {"qual_ids": qual_ids, "drop_ids": drop_ids}
-        _CURATION_CACHE[key] = shared
-    return shared
+    )
+    cc = DS.connected_components(pairs, "doc_a", "doc_b")
+    drop_ids = (
+        cc.filter(F.col("n") != F.col("cluster"))
+        .select(F.col("n").alias("doc_id"))
+        .persist()
+    )
+    drop_ids.count()
+    return {"qual_ids": qual_ids, "drop_ids": drop_ids}
 
 
 def q_curation_funnel(spark, sf_dir):
@@ -3391,19 +3337,13 @@ def q_frontier_plan(spark, sf_dir):
 #: `contamination_frac` tokenize the SAME corpus with the SAME n=8
 #: grammar — slicing one cached frame by source replaces four
 #: tokenize+md5 scans (bench + corpus sides of each query) with one.
-_N8_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact("n8_shingles")
 def _n8_shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _N8_SHINGLES_CACHE.get(key)
-    if sh is None:
-        docs = _load(spark, sf_dir, "documents")
-        sh = WT._token_shingle_hashes(
-            DS.ensure_parallelism(docs), ["doc_id", "source"], "text", 8
-        ).persist()
-        sh.count()  # materialize before any consumer forks the plan
-        _N8_SHINGLES_CACHE[key] = sh
+    docs = _load(spark, sf_dir, "documents")
+    sh = WT._token_shingle_hashes(
+        DS.ensure_parallelism(docs), ["doc_id", "source"], "text", 8
+    ).persist()
+    sh.count()  # materialize before any consumer forks the plan
     return sh
 
 
@@ -3487,25 +3427,19 @@ def q_dedup_clusters(spark, sf_dir):
 #: consumer skips the en-slice trigram-count train pass.  The tables
 #: are exact integer counts (order-independent), so sharing cannot
 #: introduce float drift.
-_CHAR_LM_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
+@session_artifact("char_lm")
 def _char_lm_cached(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _CHAR_LM_CACHE.get(key)
-    if model is None:
-        docs = DS.ensure_parallelism(_load(spark, sf_dir, "documents"))
-        model = WT.train_char_lm(docs.filter(F.col("lang") == "en"), "text")
-        for name in ("tri", "ctx"):
-            model[name] = model[name].persist()
-            model[name].count()  # materialize before any consumer forks
-        # both consumers score the IDENTICAL corpus under this model —
-        # the 150M-row trigram scoring stream runs once, its per-doc
-        # (n_trigrams, avg_neg_logp) rows persist (per-doc partial sums
-        # stay map-side-contiguous inside lm_score, unchanged)
-        model["scored"] = WT.lm_score(docs, "doc_id", "text", model).persist()
-        model["scored"].count()
-        _CHAR_LM_CACHE[key] = model
+    docs = DS.ensure_parallelism(_load(spark, sf_dir, "documents"))
+    model = WT.train_char_lm(docs.filter(F.col("lang") == "en"), "text")
+    for name in ("tri", "ctx"):
+        model[name] = model[name].persist()
+        model[name].count()  # materialize before any consumer forks
+    # both consumers score the IDENTICAL corpus under this model —
+    # the 150M-row trigram scoring stream runs once, its per-doc
+    # (n_trigrams, avg_neg_logp) rows persist (per-doc partial sums
+    # stay map-side-contiguous inside lm_score, unchanged)
+    model["scored"] = WT.lm_score(docs, "doc_id", "text", model).persist()
+    model["scored"].count()
     return model
 
 
@@ -4491,58 +4425,52 @@ def q_bitext_verify(spark, sf_dir):
 #: session-memoized NB confusion matrix — q_nb_langid and q_langid_eval
 #: share the identical train+classify subtree (the model fit is the
 #: dominant cost), so the confusion frame is built once per (app, sf)
-_NB_CONF_CACHE: dict = {}
-
-
+@session_artifact("nb_confusion")
 def _nb_confusion_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    conf = _NB_CONF_CACHE.get(key)
-    if conf is None:
-        docs = DS.ensure_parallelism(
-            spark.read.parquet(
-                os.path.join(sf_dir, "documents.parquet")
-            ).select(
-                F.col("doc_id").cast("string").alias("doc_id"), "lang", "text"
-            )
+    docs = DS.ensure_parallelism(
+        spark.read.parquet(
+            os.path.join(sf_dir, "documents.parquet")
+        ).select(
+            F.col("doc_id").cast("string").alias("doc_id"), "lang", "text"
         )
-        # ONE trigram explode instead of two: the per-doc gram counts
-        # come from the identical groupBy(doc_id, g) aggregation the
-        # classifier ran internally (same keys, same partitioning — the
-        # (doc, lang) float partial sums see exactly the same rows),
-        # and the TRAIN-side (lang, g) counts re-aggregate those exact
-        # integers through a broadcast doc→lang attach, never a second
-        # corpus scan.
-        doc_grams = (
-            WT._char_trigrams(docs, ["doc_id"], "text")
-            .groupBy("doc_id", "g")
-            .agg(F.count("*").alias("cnt"))
-            .persist()
+    )
+    # ONE trigram explode instead of two: the per-doc gram counts
+    # come from the identical groupBy(doc_id, g) aggregation the
+    # classifier ran internally (same keys, same partitioning — the
+    # (doc, lang) float partial sums see exactly the same rows),
+    # and the TRAIN-side (lang, g) counts re-aggregate those exact
+    # integers through a broadcast doc→lang attach, never a second
+    # corpus scan.
+    doc_grams = (
+        WT._char_trigrams(docs, ["doc_id"], "text")
+        .groupBy("doc_id", "g")
+        .agg(F.count("*").alias("cnt"))
+        .persist()
+    )
+    doc_grams.count()
+    lang_counts = (
+        doc_grams.join(
+            F.broadcast(docs.select("doc_id", "lang")), "doc_id"
         )
-        doc_grams.count()
-        lang_counts = (
-            doc_grams.join(
-                F.broadcast(docs.select("doc_id", "lang")), "doc_id"
-            )
-            .groupBy("lang", "g")
-            .agg(F.sum("cnt").alias("c"))
-        )
-        model = WT.train_nb_langid(
-            docs, "lang", "text", gram_counts=lang_counts
-        )
-        pred = WT.nb_classify(
-            docs, "doc_id", "text", model, doc_gram_counts=doc_grams
-        )
-        truth = docs.select("doc_id", F.col("lang").alias("true_lang"))
-        conf = (
-            pred.join(truth, "doc_id")
-            .groupBy("true_lang", "pred_lang")
-            .agg(F.count("*").cast("long").alias("n_docs"))
-            .persist()
-        )
-        conf.count()  # materialize before any consumer forks the plan
-        doc_grams.unpersist()  # confusion frame is materialized; the
-        # intermediate gram cache has no further consumer
-        _NB_CONF_CACHE[key] = conf
+        .groupBy("lang", "g")
+        .agg(F.sum("cnt").alias("c"))
+    )
+    model = WT.train_nb_langid(
+        docs, "lang", "text", gram_counts=lang_counts
+    )
+    pred = WT.nb_classify(
+        docs, "doc_id", "text", model, doc_gram_counts=doc_grams
+    )
+    truth = docs.select("doc_id", F.col("lang").alias("true_lang"))
+    conf = (
+        pred.join(truth, "doc_id")
+        .groupBy("true_lang", "pred_lang")
+        .agg(F.count("*").cast("long").alias("n_docs"))
+        .persist()
+    )
+    conf.count()  # materialize before any consumer forks the plan
+    doc_grams.unpersist()  # confusion frame is materialized; the
+    # intermediate gram cache has no further consumer
     return conf
 
 
@@ -5784,23 +5712,17 @@ def q_filter_agreement(spark, sf_dir):
 #: lang=='en' label — the 26-replace entropy scan and the label join
 #: run once per (session, sf).  `entropy_bits` is already rounded to
 #: 6 dp per doc, so sharing the materialized frame is value-identical.
-_ENTROPY_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact("entropy_labels")
 def _entropy_label_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sc = _ENTROPY_LABEL_CACHE.get(key)
-    if sc is None:
-        docs = DS.ensure_parallelism(_load(spark, sf_dir, "documents"))
-        ce = WT.char_entropy(docs, "doc_id", "text")
-        sc = ce.select(
-            "doc_id", F.col("entropy_bits").alias("score")
-        ).join(
-            docs.select("doc_id", (F.col("lang") == "en").alias("pos")),
-            "doc_id",
-        ).persist()
-        sc.count()  # materialize before any consumer forks the plan
-        _ENTROPY_LABEL_CACHE[key] = sc
+    docs = DS.ensure_parallelism(_load(spark, sf_dir, "documents"))
+    ce = WT.char_entropy(docs, "doc_id", "text")
+    sc = ce.select(
+        "doc_id", F.col("entropy_bits").alias("score")
+    ).join(
+        docs.select("doc_id", (F.col("lang") == "en").alias("pos")),
+        "doc_id",
+    ).persist()
+    sc.count()  # materialize before any consumer forks the plan
     return sc
 
 

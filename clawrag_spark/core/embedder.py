@@ -90,11 +90,6 @@ def embed_many_np(texts, dim: int = DEFAULT_DIM) -> np.ndarray:
     return (mat / norms[:, None]).astype(np.float32)
 
 
-def embed_batch(texts, dim: int = DEFAULT_DIM) -> list[list[float]]:
-    """Embed a batch (UDF path) — same math, loop kept in numpy per text."""
-    return [embed_text(t, dim) for t in texts]
-
-
 # ---------------------------------------------------- E2 fallback chain
 # Mirrors embedding_manager.py:43-67 (per-provider fallback chains +
 # known-dimension registry) and :146-163 (try primary → walk the chain

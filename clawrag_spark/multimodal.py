@@ -584,11 +584,6 @@ def image_hashes(
     ).mapInPandas(run, schema)
 
 
-def image_ahash(media_df: DataFrame, id_col: str, media_col: str = "media") -> DataFrame:
-    """(id, ahash): see :func:`image_hashes`."""
-    return image_hashes(media_df, id_col, media_col, method="ahash")
-
-
 def image_near_dups(
     media_df: DataFrame,
     id_col: str,

@@ -50,18 +50,6 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_dedup_keep_first(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup: keep the lowest-id doc per sha256(text)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
 def shingle_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Explode docs to (id, 3-token shingle) rows — the shared input of
     MinHash banding AND the exact Jaccard verify.  Tokenization + the

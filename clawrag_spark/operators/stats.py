@@ -6,11 +6,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def collection_counts(df: DataFrame, collection_col: str) -> DataFrame:
-    """A1: per-collection counts (collection_manager.py:236)."""
-    return df.groupBy(collection_col).agg(F.count("*").alias("n_docs"))
-
-
 def collection_stats(
     df: DataFrame, collection_col: str, dims: int = 768
 ) -> DataFrame:

@@ -27,11 +27,6 @@ def preview(col, n: int = 500) -> Column:
     return F.substring(col, 1, n)
 
 
-def truncate_guard(col, max_chars: int = 10 * 1024 * 1024) -> Column:
-    """P12: 10 MB text cap (ingest_v2/pipeline.py:54-64)."""
-    return F.substring(col, 1, max_chars)
-
-
 def extract_amounts(col) -> Column:
     """P11: currency-amount regex (ingest_v2/pipeline.py:135-139).
 

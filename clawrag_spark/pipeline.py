@@ -194,32 +194,6 @@ def scan_profile_filter(
     return pages.filter(ext.isin(exts) & ~path.rlike(_IGNORE_DIR_RE))
 
 
-def dedup_version(extracted: DataFrame, policy: str = "VERSION") -> DataFrame:
-    """Versioning + active flag over doc_hash (W4/W5, models.py:365-372).
-
-    Post-extraction variant, kept for tables that arrive without the
-    pre-computed version columns (the pipeline itself uses
-    ``narrow_versioning`` before extraction so text never shuffles).
-
-    - ``version``: row_number over (doc_hash, order by warc_ts, url),
-    - ``is_active``: latest version only,
-    - ``policy='SKIP'``: keep only version 1 (first seen), matching the
-      dedup SKIPPED action (deduplication_service.py:267-276).
-    """
-    w_ver = Window.partitionBy("doc_hash").orderBy("warc_ts", "url")
-    w_all = Window.partitionBy("doc_hash")
-    # is_active = (version == max version): reuses w_ver's exchange+sort
-    # instead of a second descending sort of the full text rows
-    out = (
-        extracted
-        .withColumn("version", F.row_number().over(w_ver))
-        .withColumn("is_active", F.col("version") == F.max("version").over(w_all))
-    )
-    if policy == "SKIP":
-        out = out.filter(F.col("version") == 1)
-    return out
-
-
 def narrow_versioning(prepared: DataFrame, policy: str = "VERSION") -> DataFrame:
     """W4/W5 computed on a NARROW pre-extraction projection.
 

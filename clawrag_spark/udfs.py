@@ -14,110 +14,6 @@ from pyspark.sql import types as T
 
 from .core import oracle
 from .core.bm25_tokenize import tokenize as _bm25_tokenize
-from .core.embedder import embed_text
-
-EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_hash", T.StringType()),
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("engine", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("text_length", T.IntegerType()),
-        T.StructField("quality_score", T.DoubleType()),
-        T.StructField("language", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("n_headings", T.IntegerType()),
-        T.StructField("n_lists", T.IntegerType()),
-        T.StructField("n_tables", T.IntegerType()),
-        T.StructField("n_paragraphs", T.IntegerType()),
-        T.StructField("encoding", T.StringType()),
-        T.StructField("encoding_source", T.StringType()),
-    ]
-)
-
-
-@F.pandas_udf(EXTRACT_SCHEMA)
-def extract_page(html: pd.Series, lang_hint: pd.Series) -> pd.DataFrame:
-    """Full per-document reference pipeline over an Arrow batch.
-
-    Route (mime sniff) → extract (HTML boilerplate-strip / PDF layout /
-    plain text) → quality → language.  Byte-identical to
-    ``core.oracle.process_document`` because it *is* that function.
-    """
-    out = {k: [] for k in (
-        "doc_hash", "doc_id", "mime", "engine", "text", "text_length",
-        "quality_score", "language", "error",
-        "n_headings", "n_lists", "n_tables", "n_paragraphs",
-        "encoding", "encoding_source",
-    )}
-    for payload, hint in zip(html, lang_hint):
-        r = oracle.process_document(payload, hint)
-        out["doc_hash"].append(r.doc_hash)
-        out["doc_id"].append(r.doc_id)
-        out["mime"].append(r.mime)
-        out["engine"].append(r.engine)
-        out["text"].append(r.text)
-        out["text_length"].append(r.text_length)
-        out["quality_score"].append(r.quality_score)
-        out["language"].append(r.language)
-        out["error"].append(r.error)
-        out["n_headings"].append(r.artifacts.get("headings_count", 0))
-        out["n_lists"].append(r.artifacts.get("lists_count", 0))
-        out["n_tables"].append(r.artifacts.get("tables_count", 0))
-        out["n_paragraphs"].append(r.artifacts.get("paragraphs_count", 0))
-        out["encoding"].append(r.artifacts.get("encoding", ""))
-        out["encoding_source"].append(r.artifacts.get("encoding_source", ""))
-    return pd.DataFrame(out)
-
-
-CHUNK_ELEM = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("char_start", T.LongType()),
-        T.StructField("char_end", T.LongType()),
-        T.StructField("total_chunks", T.IntegerType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ]
-)
-CHUNK_SCHEMA = T.ArrayType(CHUNK_ELEM)
-
-
-def make_chunk_embed_udf(chunk_size: int, overlap: int, embed_dim: int):
-    """Chunker + embedder in ONE vectorized pass (north star: "chunk
-    embeddings computed in the same vectorized UDF pass").
-
-    Returns array<struct<text,char_start,char_end,total_chunks,
-    embedding>> which the caller ``posexplode``s — the chunk index comes
-    free (SURVEY.md W6), and ``total_chunks`` (A8) is stamped here
-    because the UDF already knows the per-doc chunk count: computing it
-    downstream would cost a full shuffle of the chunk rows (measured
-    ~2.5x the chunking stage itself) for a number the producer had for
-    free.
-    """
-
-    @F.pandas_udf(CHUNK_SCHEMA)
-    def chunk_embed(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            chunks = oracle.chunk_document(t or "", chunk_size, overlap)
-            n = len(chunks)
-            out.append(
-                [
-                    {
-                        "text": c.text,
-                        "char_start": c.char_start,
-                        "char_end": c.char_end,
-                        "total_chunks": n,
-                        "embedding": embed_text(c.text, embed_dim),
-                    }
-                    for c in chunks
-                ]
-            )
-        return pd.Series(out)
-
-    return chunk_embed
-
 
 CHUNK_FLAT_SCHEMA = T.StructType(
     [
@@ -407,16 +303,6 @@ def make_chunk_embed_arrow_routed(embed_dim: int):
             )
 
     return run
-
-
-def make_embed_udf(embed_dim: int):
-    """Standalone hashing-trick embedding UDF (E1)."""
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(text: pd.Series) -> pd.Series:
-        return pd.Series([embed_text(t, embed_dim) for t in text])
-
-    return embed
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))

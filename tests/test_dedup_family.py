@@ -506,12 +506,16 @@ class TestPairRestrictionIdentity:
 
         on_subset = {
             (r["doc_a"], r["doc_b"], r["jaccard"])
-            for r in e._jaccard_verified_pairs(survivors).collect()
+            for r in e._jaccard_verified_pairs(
+                survivors, DS.shingle_rows(survivors, "doc_id", "text")
+            ).collect()
         }
         ids = survivors.select("doc_id")
         restricted = {
             (r["doc_a"], r["doc_b"], r["jaccard"])
-            for r in e._jaccard_verified_pairs(docs)
+            for r in e._jaccard_verified_pairs(
+                docs, DS.shingle_rows(docs, "doc_id", "text")
+            )
             .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
             .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
             .collect()

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from clawrag_spark.session import release
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -360,14 +361,10 @@ class TestWebgraphPlans:
 
         entry_mod._ensure_pipeline_demo(spark)
         # Spark's CacheManager substitutes the session-cached edge frame
-        # into ANY matching plan — drop the cache entry so the pin sees
+        # into ANY matching plan — release the artifact so the pin sees
         # the raw operator plan regardless of test order (consumers
         # lazily rebuild it)
-        cached = entry_mod._HOST_EDGES_CACHE.pop(
-            spark.sparkContext.applicationId, None
-        )
-        if cached is not None:
-            cached.unpersist()
+        release("host_edges")
         pages = spark.read.parquet(
             os.path.join(entry_mod._DEMO_DIR, "pages.parquet")
         )

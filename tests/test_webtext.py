@@ -998,8 +998,11 @@ def test_drop_reasons_compose_back_to_funnel(spark):
 
     def pair_fn(survivors):
         import __spark_entry__ as e
+        from clawrag_spark.operators.dataset import shingle_rows
 
-        return e._jaccard_verified_pairs(survivors)
+        return e._jaccard_verified_pairs(
+            survivors, shingle_rows(survivors, "doc_id", "text")
+        )
 
     kwargs = dict(
         min_chars=50, max_top_bigram_frac=0.9,
