@@ -13,7 +13,8 @@ Layout
                   construction and is verified by pytest over the two
                   independent execution paths.
 - ``udfs.py``     vectorized pandas/Arrow UDF wrappers (no per-row Python
-                  UDFs anywhere).
+                  UDFs anywhere), incl. the one chunk+embed Arrow kernel
+                  (``chunk_embed_arrow``) every chunker runs through.
 - ``pipeline.py`` the batch extraction pipeline: pages -> validate ->
                   route -> extract -> dedup/version -> chunk -> embed ->
                   partitioned parquet sinks + per-partition metrics +

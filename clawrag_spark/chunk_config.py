@@ -11,7 +11,8 @@ Reference config tables:
   document_router_service.py:80-146).
 
 In the engine the config map keys off the sniffed MIME route; the map
-is a plain broadcastable dict consumed by the chunk UDF factory.
+is a plain broadcastable dict consumed by the routed chunker
+(``routing.route_chunks``).
 """
 
 from __future__ import annotations

@@ -80,13 +80,15 @@ def _sniff(payload: bytes) -> tuple[str, str]:
             return mtype, fmt
     # raw MPEG audio frame sync (no ID3 tag): require a FULLY valid
     # Layer-III header (non-reserved version, layer III, valid
-    # bitrate/samplerate indices), not just the 11 sync bits — a
-    # UTF-16LE BOM (FF FE) otherwise misclassifies as audio/mp3
+    # bitrate/samplerate indices) at offset 0, not just the 11 sync
+    # bits — a UTF-16LE BOM (FF FE) otherwise misclassifies as
+    # audio/mp3, and a header found further in is not the one that
+    # triggered this branch
     if (
         len(payload) >= 4
         and payload[0] == 0xFF
         and (payload[1] & 0xE0) == 0xE0
-        and parse_mp3_header(payload) is not None
+        and parse_mp3_header(payload[:4]) is not None
     ):
         return "audio", "mp3"
     return "unknown", "unknown"

@@ -366,9 +366,16 @@ def prefix_filter_similarity_join(
     shingles: DataFrame | None = None,
     sets: DataFrame | None = None,
 ) -> DataFrame:
-    """All-pairs set-similarity join via prefix filtering — the EXACT
+    """All-pairs set-similarity join via prefix filtering — an EXACT
     (zero-recall-loss) alternative to MinHash-LSH candidate generation
-    (AllPairs/PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08).
+    (AllPairs/PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08)
+    for thresholds t = threshold_num/threshold_den > 1/3.
+
+    Precondition (raises ``ValueError`` otherwise): ``threshold_den > 0``
+    and ``3 * threshold_num > threshold_den``.  The candidate filter
+    keeps only pairs with >= 2 shared prefix shingles; at t <= 1/3 a
+    qualifying pair of two >= 2-shingle docs may share only ONE shingle
+    (sizes 2/2, overlap 1: Jaccard 1/3) and would be dropped.
 
     Guarantee: if two docs' 3-shingle sets have Jaccard >= t, then under
     any global token order their (|d| - ceil(t*|d|) + 1)-length prefixes
@@ -400,6 +407,11 @@ def prefix_filter_similarity_join(
     Pass a cached :func:`shingle_rows` frame via ``shingles`` to share
     the tokenize+explode scan with other consumers.
     """
+    if threshold_den <= 0 or 3 * threshold_num <= threshold_den:
+        raise ValueError(
+            "prefix_filter_similarity_join is exact only for thresholds "
+            f"above 1/3, got {threshold_num}/{threshold_den}"
+        )
     if sets is not None:
         # caller-provided DISTINCT (doc, shingle) frame (already
         # materialized) — shared across the set-similarity queries
@@ -442,7 +454,8 @@ def prefix_filter_similarity_join(
     # 1 + (sz_a - overlap) <= sz_a - ceil(t*sz_a) + 1 = L_a tokens of a
     # rarer than it (the rarest shared token plus a-only misses), i.e.
     # rank_a(g2) <= L_a + 1 — and symmetrically for b.  Any qualifying
-    # pair with overlap >= 2 (true whenever min(sz) >= 2 at t = 4/5)
+    # pair with overlap >= 2 (true whenever min(sz) >= 2 at t > 1/3,
+    # the enforced precondition)
     # therefore shares at least TWO tokens of the extended
     # prefix-by-prefix join; counting witnesses per pair and requiring
     # >= 2 removes the coincidental single-shared-shingle fan-out
@@ -528,7 +541,7 @@ def containment_join(
     shingles: DataFrame | None = None,
     sets: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact set-CONTAINMENT join: ordered pairs (a, b) with
+    """Exact set-CONTAINMENT join for t > 1/2: ordered pairs (a, b) with
     C(a, b) = |shingles(a) ∩ shingles(b)| / |shingles(a)| >= t — the
     asymmetric near-dup relation Jaccard misses (a short doc quoted
     wholesale inside a long one has Jaccard ~ |a|/|b| but containment
@@ -556,10 +569,21 @@ def containment_join(
     hash-row count-aggregation verify (16-byte md5 rows through the
     shuffle, never gram arrays per pair).
 
+    Precondition (raises ``ValueError`` otherwise): ``threshold_den > 0``
+    and ``2 * threshold_num > threshold_den``.  The candidate filter
+    keeps only pairs with >= 2 shared shingles when |a| >= 2; at
+    t <= 1/2 a qualifying pair may share only ONE shingle (|a| = 2,
+    overlap 1: containment 1/2) and would be dropped.
+
     Returns ordered (doc_a, doc_b, sz_a, sz_b, inter, containment):
     doc_a is the contained (smaller) side; exact duplicates appear in
     both directions, as in the naive definition.
     """
+    if threshold_den <= 0 or 2 * threshold_num <= threshold_den:
+        raise ValueError(
+            "containment_join is exact only for thresholds above 1/2, "
+            f"got {threshold_num}/{threshold_den}"
+        )
     if sets is not None:
         sets = sets.select(F.col("doc"), "shingle")
     else:
@@ -590,7 +614,8 @@ def containment_join(
     # exact, zero recall loss: a qualifying pair misses at most
     # sz_a − ceil(t·sz_a) = L−1 of a's tokens from b, so among a's
     # first L+1 rarest tokens (one more than the classic prefix) at
-    # least TWO are shared whenever sz_a ≥ 2 (for sz_a = 1 the single
+    # least TWO are shared whenever sz_a ≥ 2 and t > 1/2 (the enforced
+    # precondition: then ceil(t·sz_a) ≥ 2; for sz_a = 1 the single
     # token must be shared and one witness suffices).  Counting join
     # witnesses per pair and requiring ≥ 2 removes the dominant
     # single-coincidental-shared-shingle fan-out (measured 13.1M → the

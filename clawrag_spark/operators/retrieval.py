@@ -339,68 +339,10 @@ def bm25_scores(
     return bm25_score_index(index, id_col, query_terms, k1, b)
 
 
-def _fold_sum(terms):
-    """Left-fold sum with the same association as
-    ``aggregate(…, 0.0, (acc, x) -> acc + x)``: ((0.0 + t1) + t2) + …
-    The leading 0.0 is kept so the result is bit-identical to the
-    higher-order fold even at the -0.0 edge."""
-    acc = F.lit(0.0)
-    for t in terms:
-        acc = acc + t
-    return acc
-
-
-def dot_fixed(vec_a, vec_b, dim: int, cast: str | None = None):
-    """Dot product of two fixed-width array columns, unrolled into a
-    whole-stage-codegen-friendly expression chain.  Bit-identical to
-    the ``zip_with``+``aggregate`` fold on arrays of exactly ``dim``
-    elements (same multiply and same left-to-right add association);
-    higher-order functions fall back to interpreted per-element lambda
-    evaluation, which dominates dense-vector queries.
-
-    ``cast``: per-element cast applied after extraction (e.g.
-    ``"double"`` over a raw ``array<float>`` column).  Value-identical
-    to pre-casting the whole array with ``transform`` — float→double
-    widening is exact — but an order of magnitude faster per pair:
-    elements read straight out of the primitive UnsafeArrayData
-    instead of a per-row boxed transform copy (measured 55 s → 6 s for
-    the 20M-pair triplet stage at sf1.0)."""
-
-    def elem(v, i):
-        e = F.element_at(v, i)
-        return e.cast(cast) if cast else e
-
-    return _fold_sum(
-        [elem(vec_a, i) * elem(vec_b, i) for i in range(1, dim + 1)]
-    )
-
-
-def sumsq_fixed(vec, dim: int, cast: str | None = None):
-    """Unrolled sum of squares — bit-identical to
-    ``aggregate(vec, 0.0, (acc, x) -> acc + x*x)`` on ``dim``-wide
-    arrays; ``cast`` as in :func:`dot_fixed`."""
-
-    def elem(i):
-        e = F.element_at(vec, i)
-        return e.cast(cast) if cast else e
-
-    return _fold_sum([elem(i) * elem(i) for i in range(1, dim + 1)])
-
-
-def cosine(vec_a, vec_b, dim: int | None = None):
-    """Cosine similarity between two array<float> columns, JVM-side.
-
-    Default path: built-in higher-order functions (zip_with +
-    aggregate) — works for any width.  With ``dim`` set, the fold is
-    unrolled via :func:`dot_fixed`/:func:`sumsq_fixed` into straight
-    codegen arithmetic — bit-identical on vectors of exactly that
-    width (same association order), an order of magnitude faster per
-    pair because interpreted lambda dispatch disappears."""
-    if dim is not None:
-        dot = dot_fixed(vec_a, vec_b, dim)
-        norm_a = F.sqrt(sumsq_fixed(vec_a, dim))
-        norm_b = F.sqrt(sumsq_fixed(vec_b, dim))
-        return dot / (norm_a * norm_b)
+def cosine(vec_a, vec_b):
+    """Cosine similarity between two array<float> columns, JVM-side,
+    via built-in higher-order functions (zip_with + aggregate) — works
+    for any width."""
     dot = F.aggregate(
         F.zip_with(vec_a, vec_b, lambda x, y: x * y),
         F.lit(0.0),

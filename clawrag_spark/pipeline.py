@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 
 from . import zonemaps
 from .core import oracle
-from .udfs import CHUNK_FLAT_SCHEMA, make_chunk_embed_arrow
+from .udfs import chunk_embed, plain_chunker, routed_chunker, sentence_chunker
 
 MAX_PAYLOAD_BYTES = oracle.MAX_PAYLOAD_BYTES
 DEFAULT_BUCKETS = 16
@@ -252,100 +252,29 @@ def run_parent_child(
     then resolves children → best-score-per-parent → parents table
     (J4, ``operators.retrieval.parent_resolution``).
     """
-    import pyarrow as pa
-
-    from .core.chunkers import sentence_chunks
-    from .core.embedder import embed_text_np
-
     ext = spark.read.parquet(extracted_path)
     good = (
         ext.filter(F.col("error").isNull() & (F.col("text_length") > 0)
                    & F.col("is_active"))
-        .select("url", "url_bucket", "doc_id", "text")
+        .select(
+            "url", "url_bucket", "doc_id",
+            F.concat(F.lit("parent_"),
+                     F.substring(F.sha2(F.col("text"), 256), 1, 16)).alias("parent_doc_id"),
+            "text",
+        )
     )
     parents = good.select(
-        F.concat(F.lit("parent_"),
-                 F.substring(F.sha2(F.col("text"), 256), 1, 16)).alias("parent_doc_id"),
-        F.col("url"),
-        F.col("url_bucket"),
-        F.col("text").alias("content"),
+        "parent_doc_id", "url", "url_bucket", F.col("text").alias("content")
     )
     parents_path = os.path.join(out_dir, "parents")
     parents.write.mode("overwrite").parquet(parents_path)
 
-    out_type = pa.schema(
-        [
-            ("chunk_id", pa.string()),
-            ("parent_doc_id", pa.string()),
-            ("url", pa.string()),
-            ("url_bucket", pa.int32()),
-            ("chunk_index", pa.int32()),
-            ("text", pa.string()),
-            ("char_start", pa.int64()),
-            ("char_end", pa.int64()),
-            ("embedding", pa.list_(pa.float32())),
-        ]
+    children = chunk_embed(
+        good, sentence_chunker(child_size, child_overlap), embed_dim
+    ).select(
+        "chunk_id", "parent_doc_id", "url", "url_bucket", "chunk_index",
+        "text", "char_start", "char_end", "embedding",
     )
-
-    def children_stage(iterator):
-        import hashlib
-
-        import numpy as np
-
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            buckets = batch.column("url_bucket").to_pylist()
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            o = {k: [] for k in ("cid", "pid", "url", "bucket", "idx",
-                                 "text", "start", "end")}
-            vecs = []
-            for url, bucket, doc_id, text in zip(urls, buckets, doc_ids, texts):
-                text = text or ""
-                pid = "parent_" + hashlib.sha256(text.encode()).hexdigest()[:16]
-                for i, c in enumerate(sentence_chunks(text, child_size, child_overlap)):
-                    o["cid"].append(f"{doc_id}_chunk_{i}")
-                    o["pid"].append(pid)
-                    o["url"].append(url)
-                    o["bucket"].append(bucket)
-                    o["idx"].append(i)
-                    o["text"].append(c.text)
-                    o["start"].append(c.char_start)
-                    o["end"].append(c.char_end)
-                    vecs.append(embed_text_np(c.text, embed_dim))
-            n = len(o["cid"])
-            flat = np.concatenate(vecs) if n else np.empty(0, dtype=np.float32)
-            offsets = pa.array(np.arange(0, (n + 1) * embed_dim, embed_dim, dtype=np.int32))
-            emb = pa.ListArray.from_arrays(offsets, pa.array(flat, pa.float32()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o["cid"], pa.string()),
-                    pa.array(o["pid"], pa.string()),
-                    pa.array(o["url"], pa.string()),
-                    pa.array(o["bucket"], pa.int32()),
-                    pa.array(o["idx"], pa.int32()),
-                    pa.array(o["text"], pa.string()),
-                    pa.array(o["start"], pa.int64()),
-                    pa.array(o["end"], pa.int64()),
-                    emb,
-                ],
-                schema=out_type,
-            )
-
-    children_schema = T.StructType(
-        [
-            T.StructField("chunk_id", T.StringType()),
-            T.StructField("parent_doc_id", T.StringType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("url_bucket", T.IntegerType()),
-            T.StructField("chunk_index", T.IntegerType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("char_start", T.LongType()),
-            T.StructField("char_end", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    children = good.mapInArrow(children_stage, children_schema)
     children_path = os.path.join(out_dir, "children")
     children.write.mode("overwrite").parquet(children_path)
 
@@ -805,7 +734,6 @@ def run_pipeline(
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     t_start = time.monotonic()
-    timing = os.environ.get("CLAWRAG_TIMING") == "1"
     _t = [t_start]
     stage_sec: dict = {}
 
@@ -814,8 +742,6 @@ def run_pipeline(
         stage_sec[label] = round(
             stage_sec.get(label, 0.0) + (now - _t[0]), 3
         )
-        if timing:
-            print(f"TIMING {label}: {now - _t[0]:.2f}s", flush=True)
         _t[0] = now
     extracted_path = os.path.join(out_dir, "extracted")
     chunks_path = os.path.join(out_dir, "chunks")
@@ -966,49 +892,25 @@ def run_pipeline(
     # chunk only THIS run's rows — prior runs' chunks are already committed
     # (exactly-once on resume); doc_hashes never span runs thanks to the
     # resume anti-join, so is_active is stable across runs.
-    if routed_chunking:
-        from .udfs import ROUTED_CHUNK_SCHEMA, make_chunk_embed_arrow_routed
-
-        good = (
-            ext.filter(F.col("run_id") == F.lit(run_id))
-            .filter(F.col("error").isNull() & (F.col("text_length") > 0))
-            .filter(F.col("is_active"))
-            .select("url", "url_bucket", "doc_id", "mime", "text")
+    chunker = (routed_chunker() if routed_chunking
+               else plain_chunker(chunk_size, chunk_overlap))
+    good = (
+        ext.filter(F.col("run_id") == F.lit(run_id))
+        .filter(F.col("error").isNull() & (F.col("text_length") > 0))
+        .filter(F.col("is_active"))
+        .select("url", "url_bucket", "doc_id",
+                *(["mime"] if routed_chunking else []), "text")
+    )
+    chunks = (
+        chunk_embed(good, chunker, embed_dim)
+        .withColumn("run_id", F.lit(run_id))
+        .select(
+            "chunk_id", "doc_id", "url", "url_bucket",
+            *(f.name for f in chunker.doc_fields),
+            "chunk_index", "total_chunks", "text", "char_start", "char_end",
+            "embedding", "run_id",
         )
-        chunks = (
-            good.mapInArrow(
-                make_chunk_embed_arrow_routed(embed_dim), ROUTED_CHUNK_SCHEMA
-            )
-            .withColumn("chunk_id",
-                        F.concat_ws("_", F.col("doc_id"), F.lit("chunk"),
-                                    F.col("chunk_index")))
-            .withColumn("run_id", F.lit(run_id))
-            .select(
-                "chunk_id", "doc_id", "url", "url_bucket", "route", "profile",
-                "chunk_index", "total_chunks", "text", "char_start",
-                "char_end", "embedding", "run_id",
-            )
-        )
-    else:
-        chunk_embed = make_chunk_embed_arrow(chunk_size, chunk_overlap, embed_dim)
-        good = (
-            ext.filter(F.col("run_id") == F.lit(run_id))
-            .filter(F.col("error").isNull() & (F.col("text_length") > 0))
-            .filter(F.col("is_active"))
-            .select("url", "url_bucket", "doc_id", "text")
-        )
-        chunks = (
-            good.mapInArrow(chunk_embed, CHUNK_FLAT_SCHEMA)
-            .withColumn("chunk_id",
-                        F.concat_ws("_", F.col("doc_id"), F.lit("chunk"),
-                                    F.col("chunk_index")))
-            .withColumn("run_id", F.lit(run_id))
-            .select(
-                "chunk_id", "doc_id", "url", "url_bucket", "chunk_index",
-                "total_chunks", "text", "char_start", "char_end", "embedding",
-                "run_id",
-            )
-        )
+    )
     pre_chunk_files = zonemaps.snapshot_files(chunks_path)
     chunks.write.mode("append").parquet(chunks_path)
     chunks_file_stats = zonemaps.collect_file_stats(
@@ -1120,8 +1022,7 @@ def run_pipeline(
         # lineage (auto_plan=True), or None — audit trail for the
         # operational feedback loop
         "plan": plan,
-        # driver-measured wall per stage (always on; the CLAWRAG_TIMING
-        # env only controls the live print) — lets the bench decompose
+        # wall clock per stage, measured around each job — lets the bench decompose
         # scaling: the Arrow python stages vs JVM scan/write/commit
         "stage_sec": stage_sec,
     }

@@ -13,7 +13,7 @@ document_router_service.py:80-146 profiles):
   (C9, document_routing_rules.json:3-94), else the per-MIME config
   (C8, ingest_config.py:29-38).
 
-Pure per-document function + the Arrow stage that runs it in Spark.
+Pure per-document functions; ``udfs.routed_chunker`` runs them in Spark.
 """
 
 from __future__ import annotations
@@ -62,13 +62,14 @@ def detect_and_chunk(
     text: str,
     profile: str | None = None,
 ) -> tuple[str, str, list[Chunk]]:
-    """(route, applied_profile, chunks) for one document — the oracle
-    twin of the Arrow stage in ``udfs.make_chunk_embed_arrow_routed``.
+    """(route, applied_profile, chunks) for one document — what
+    ``udfs.routed_chunker`` runs per row inside the chunk+embed kernel
+    ``udfs.chunk_embed_arrow``.
 
     Documents whose extension contradicts their sniffed content are
     REJECTED with zero chunks (S5 crosscheck, upload.py:70-116); the
-    Arrow stage emits a single total_chunks=0 marker row for them so the
-    rejection stays countable downstream.
+    routed chunker emits a single total_chunks=0 marker row for them so
+    the rejection stays countable downstream.
     """
     err = dt.crosscheck_extension_mime(url, mime)
     if err is not None:

@@ -259,16 +259,14 @@ def incremental_index_stream(
     """
     from .core import oracle as _oracle
     from .pipeline import _bm25_current, build_bm25_index
-    from .udfs import CHUNK_FLAT_SCHEMA, make_chunk_embed_arrow
+    from .udfs import chunk_embed, plain_chunker
 
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_index_checkpoint")
     reader = spark.readStream.schema(PAGES_SCHEMA).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(pages_dir)
-    chunk_embed = make_chunk_embed_arrow(
-        _oracle.DEFAULT_CHUNK_SIZE, _oracle.DEFAULT_CHUNK_OVERLAP, embed_dim
-    )
+    chunker = plain_chunker(_oracle.DEFAULT_CHUNK_SIZE, _oracle.DEFAULT_CHUNK_OVERLAP)
 
     def process_batch(batch_df, batch_id: int) -> None:
         run_id = f"stream_b{batch_id:06d}"
@@ -311,15 +309,7 @@ def incremental_index_stream(
                 .distinct()
             )
             good = good.join(seen, "doc_id", "left_anti")
-        chunks = (
-            good.mapInArrow(chunk_embed, CHUNK_FLAT_SCHEMA)
-            .withColumn(
-                "chunk_id",
-                F.concat_ws("_", F.col("doc_id"), F.lit("chunk"),
-                            F.col("chunk_index")),
-            )
-        )
-        chunks.write.mode("overwrite").parquet(
+        chunk_embed(good, chunker, embed_dim).write.mode("overwrite").parquet(
             os.path.join(out_dir, "chunks", f"run_id={run_id}")
         )
         build_bm25_index(spark, out_dir, run_id, commit=True)

@@ -864,6 +864,26 @@ def test_containment_threshold_is_integer_exact(spark):
     assert (3, 1) not in got
 
 
+@pytest.mark.parametrize(
+    "join, num, den",
+    [
+        ("prefix_filter_similarity_join", 1, 3),
+        ("prefix_filter_similarity_join", 1, 0),
+        ("containment_join", 1, 2),
+    ],
+)
+def test_witness_filter_thresholds_rejected(spark, join, num, den):
+    """The >= 2-witness candidate filter is exact only above 1/3
+    (Jaccard) and 1/2 (containment): at those thresholds a pair sharing
+    ONE shingle qualifies (sizes 2/2 -> Jaccard 1/3; |a| = 2 ->
+    containment 1/2), so the joins refuse them instead of dropping it."""
+    docs = spark.createDataFrame([(1, "a b c"), (2, "c d e")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="exact only"):
+        getattr(DS, join)(
+            docs, "doc_id", "text", threshold_num=num, threshold_den=den
+        )
+
+
 def test_dedup_representatives_keep_best(spark):
     from pyspark.sql import functions as F
 

@@ -78,24 +78,31 @@ class TestParentChild:
 
 class TestPerTypeChunkConfig:
     def test_mime_config_selected(self, spark, warehouse):
+        """C8 per-MIME sizes are the routed chunker's default-profile
+        branch for unstructured-text and unknown routes."""
         out, _ = warehouse
         from clawrag_spark.chunk_config import config_for_mime
+        from clawrag_spark.core import data_type as dt
         from clawrag_spark.core.oracle import chunk_document
-        from clawrag_spark.udfs import CHUNK_FLAT_SCHEMA, make_chunk_embed_arrow_by_mime
+        from clawrag_spark.udfs import chunk_embed, routed_chunker
 
         ext = spark.read.parquet(os.path.join(out, "extracted"))
         good = ext.filter(
             F.col("error").isNull() & (F.col("text_length") > 0) & F.col("is_active")
         ).select("url", "url_bucket", "doc_id", "mime", "text")
-        stage = make_chunk_embed_arrow_by_mime(64)
-        chunks = good.mapInArrow(stage, CHUNK_FLAT_SCHEMA)
-        got = chunks.groupBy("doc_id").agg(F.max("total_chunks").alias("n")).collect()
-        texts = {r["doc_id"]: (r["mime"], r["text"]) for r in good.collect()}
+        chunks = chunk_embed(good, routed_chunker(), 64)
+        got = (
+            chunks.filter(F.col("route").isin(dt.UNSTRUCTURED_TEXT, dt.UNKNOWN)
+                          & (F.col("profile") == "default"))
+            .groupBy("url").agg(F.max("total_chunks").alias("n")).collect()
+        )
+        assert got
+        texts = {r["url"]: (r["mime"], r["text"]) for r in good.collect()}
         for row in got[:80]:
-            mime, text = texts[row["doc_id"]]
+            mime, text = texts[row["url"]]
             cfg = config_for_mime(mime)
             expect = chunk_document(text, cfg.chunk_size, cfg.chunk_overlap)
             assert row["n"] == len(expect)
         # html config (500/80) produces more chunks than the default 1000/200
-        html_docs = [d for d, (m, t) in texts.items() if m == "text/html"]
+        html_docs = [u for u, (m, t) in texts.items() if m == "text/html"]
         assert html_docs

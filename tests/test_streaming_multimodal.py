@@ -1227,6 +1227,9 @@ class TestExifAndMp3:
         assert _sniff(encode_mp3_stub()) == ("audio", "mp3")
         assert _sniff(encode_mp3_stub(id3_pad=16)) == ("audio", "mp3")
         assert _sniff(b"\xff\xd8\xff\xe0rest")[1] == "jpeg"  # SOI wins
+        # a valid frame header further in does not vouch for a bad
+        # sync at offset 0
+        assert _sniff(b"\xff\xe0junk" + encode_mp3_stub()) == ("unknown", "unknown")
 
     def test_audio_features_mp3_header_only(self, spark):
         import numpy as np
