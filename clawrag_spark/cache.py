@@ -2,10 +2,13 @@
 
 Mirrors query_cache.py's md5-keyed result cache, re-expressed for a
 warehouse: the cache key folds in the query (terms + BM25 parameters)
-AND the index snapshot identity (the pointer's committed run set), so
-snapshot growth invalidates by construction — a new run set is a new
-key, no TTL or explicit invalidation path needed (the reference
-invalidates per collection version; the run set IS the version here).
+AND everything a probe's result depends on — the pointer's committed
+run set, its ``df``/``stats`` snapshot names, and the basenames of the
+committed equality-delete files (deletes.py).  So every change
+invalidates by construction: index growth is a new run set, a takedown
+is a new delete file (merge-on-read masking), a purge is a new df/stats
+snapshot — no TTL or explicit invalidation path needed (the reference
+invalidates per collection version; these parts ARE the version here).
 Entries are parquet directories committed by Spark's _SUCCESS marker;
 a crashed half-written entry is simply recomputed over.
 
@@ -22,15 +25,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .deletes import _committed_delete_files
 from .pipeline import _bm25_current, bm25_query_index
 
 
-def _cache_key(terms: list[str], params: dict, snapshot: dict) -> str:
+def _cache_key(
+    terms: list[str], params: dict, snapshot: dict, delete_files: list[str]
+) -> str:
     payload = json.dumps(
         {
             "terms": [t.lower() for t in terms],
             "params": params,
             "runs": sorted(snapshot.get("runs") or [snapshot.get("run_id")]),
+            "df": snapshot["df"],
+            "stats": snapshot["stats"],
+            "deletes": delete_files,
         },
         sort_keys=True,
     )
@@ -56,7 +65,10 @@ def cached_bm25_query(
     current = _bm25_current(os.path.join(out_dir, "bm25_index"))
     if current is None:
         raise FileNotFoundError(f"no committed BM25 snapshot in {out_dir}")
-    key = _cache_key(query_terms, {"k1": k1, "b": b, "epsilon": epsilon}, current)
+    deletes = [os.path.basename(f) for f in _committed_delete_files(out_dir)]
+    key = _cache_key(
+        query_terms, {"k1": k1, "b": b, "epsilon": epsilon}, current, deletes
+    )
     entry = os.path.join(cache_dir, key)
     if not os.path.exists(os.path.join(entry, "_SUCCESS")):
         result = bm25_query_index(spark, out_dir, query_terms, k1, b, epsilon)

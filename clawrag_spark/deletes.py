@@ -50,6 +50,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 DELETES_SUBDIR = "deletes"
 APPLIED_SUBDIR = ".applied"
 _DEL_RE = re.compile(r"^del_(\d{6,})_[0-9a-f]{8}\.parquet$")
+# what ``record_takedown`` writes; declared on read so masking a
+# committed view never starts a schema-inference job
+_DELETE_SCHEMA = "url string, reason string, seq bigint"
 
 
 def _deletes_dir(out_dir: str) -> str:
@@ -128,7 +131,7 @@ def deleted_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
     files = _committed_delete_files(out_dir)
     if not files:
         return None
-    return spark.read.parquet(*files)
+    return spark.read.schema(_DELETE_SCHEMA).parquet(*files)
 
 
 def apply_merge_on_read(

@@ -230,6 +230,7 @@ def expire_runs(
                 os.rename(tmp, dst)
                 for d in src_dirs:
                     shutil.rmtree(d, ignore_errors=True)
+            # df/stats are untouched, so the pointer's summary still holds
             pointer["runs"] = [base_id] + [
                 r for r in pointer.get("runs", []) if r not in old
             ]
@@ -445,7 +446,7 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
     2. every per-run postings/doclen delta dir is rewritten filtered,
        each swapped in with the compaction module's two-rename window;
     3. df/stats are recomputed IN FULL from the retained postings into
-       new snapshot dirs;
+       new snapshot dirs, and their summary scalars with them;
     4. the pointer swaps atomically (``_current.json``) — readers see
        the old consistent snapshot until the swap, the new one after.
 
@@ -457,7 +458,12 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from . import deletes as D
-    from .pipeline import _bm25_commit_pointer, _bm25_current
+    from .pipeline import (
+        _bm25_commit_pointer,
+        _bm25_current,
+        _read_bm25_table,
+        bm25_snapshot_summary,
+    )
 
     index_dir = os.path.join(out_dir, "bm25_index")
     current = _bm25_current(index_dir)
@@ -466,17 +472,17 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
     dels = D.deleted_urls(spark, out_dir)
     if dels is None:
         return {"purged": False, "reason": "no deletes"}
-    doclen_dir = os.path.join(index_dir, "doclen")
-    postings_dir = os.path.join(index_dir, "postings")
-    doclen = spark.read.parquet(doclen_dir)
-    if "url" not in doclen.columns:
+    # the declared doclen schema reads a missing url column as null, so
+    # only an inferred schema can tell a pre-url index apart
+    if "url" not in spark.read.parquet(os.path.join(index_dir, "doclen")).columns:
         raise ValueError(
             "this BM25 index predates url-carrying doclen deltas; "
             "rebuild it (build_bm25_index on a fresh index_dir) before "
             "purging deletes"
         )
     dead = (
-        doclen.join(
+        _read_bm25_table(spark, index_dir, "doclen")
+        .join(
             F.broadcast(dels.select("url").distinct()), "url", "left_semi"
         )
         .select("chunk_id")
@@ -487,23 +493,26 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
         dead.unpersist()
         return {"purged": False, "reason": "no indexed chunks deleted"}
 
-    def rewrite(table_dir: str) -> None:
+    def rewrite(table: str) -> None:
+        table_dir = os.path.join(index_dir, table)
         for name in sorted(os.listdir(table_dir)):
             if not name.startswith("run_id="):
                 continue
             part = os.path.join(table_dir, name)
-            kept = spark.read.parquet(part).join(dead, "chunk_id", "left_anti")
+            kept = _read_bm25_table(
+                spark, index_dir, table, os.path.join(table, name)
+            ).join(dead, "chunk_id", "left_anti")
             tmp, old = part + ".purge_tmp", part + ".purge_old"
             kept.write.mode("overwrite").parquet(tmp)
             os.rename(part, old)
             os.rename(tmp, part)  # same two-rename window as compaction
             shutil.rmtree(old)
 
-    rewrite(postings_dir)
-    rewrite(doclen_dir)
+    rewrite("postings")
+    rewrite("doclen")
     committed_runs = current.get("runs")
-    post = spark.read.parquet(postings_dir)
-    dl = spark.read.parquet(doclen_dir)
+    post = _read_bm25_table(spark, index_dir, "postings")
+    dl = _read_bm25_table(spark, index_dir, "doclen")
     if committed_runs is not None:
         post = post.filter(F.col("run_id").isin(committed_runs))
         dl = dl.filter(F.col("run_id").isin(committed_runs))
@@ -522,6 +531,7 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
     pointer = dict(current)
     pointer["df"] = df_name
     pointer["stats"] = stats_name
+    pointer["summary"] = bm25_snapshot_summary(spark, index_dir, df_name, stats_name)
     _bm25_commit_pointer(index_dir, pointer)
     dead.unpersist()
     return {"purged": True, "n_dead_chunks": n_dead, "pointer": pointer}

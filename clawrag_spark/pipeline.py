@@ -42,7 +42,7 @@ import time
 import uuid
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -489,6 +489,10 @@ def build_bm25_index(
       directory and exposed by atomically swapping a pointer file (the
       plain-parquet stand-in for Iceberg's snapshot commit /
       ``MERGE INTO``).  Readers never see a partial snapshot.
+    - the pointer also carries the snapshot's ``summary`` scalars
+      (``bm25_snapshot_summary``: n_docs, sum_dl, avg_idf), the way an
+      Iceberg snapshot carries its summary map, so a probe plans
+      without reading the df/stats tables first.
 
     The PIPELINE MANIFEST is the single commit point (round-2 advice):
     the pointer records the exact ``runs`` it covers, the index only
@@ -550,24 +554,24 @@ def build_bm25_index(
 
     # additive df/stats rollup from the deltas just written
     df_delta = (
-        spark.read.parquet(os.path.join(index_dir, "postings"))
+        _read_bm25_table(spark, index_dir, "postings")
         .filter(F.col("run_id").isin(todo))
         .groupBy("term")
         .agg(F.countDistinct("chunk_id").alias("doc_freq"))
     )
     dl_delta = (
-        spark.read.parquet(os.path.join(index_dir, "doclen"))
+        _read_bm25_table(spark, index_dir, "doclen")
         .filter(F.col("run_id").isin(todo))
         .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
     )
     if current is not None:
-        prev_df = spark.read.parquet(os.path.join(index_dir, current["df"]))
+        prev_df = _read_bm25_table(spark, index_dir, "df", current["df"])
         df_new = (
             prev_df.unionByName(df_delta)
             .groupBy("term")
             .agg(F.sum("doc_freq").alias("doc_freq"))
         )
-        prev_stats = spark.read.parquet(os.path.join(index_dir, current["stats"]))
+        prev_stats = _read_bm25_table(spark, index_dir, "stats", current["stats"])
         stats_new = (
             prev_stats.unionByName(dl_delta)
             .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
@@ -586,6 +590,7 @@ def build_bm25_index(
         "stats": stats_name,
         "run_id": run_id,
         "runs": sorted(pointer_runs | set(todo)),
+        "summary": bm25_snapshot_summary(spark, index_dir, df_name, stats_name),
     }
     if commit:
         _bm25_commit_pointer(index_dir, pointer)
@@ -610,6 +615,58 @@ def _bm25_current(index_dir: str) -> dict | None:
         return json.load(fh)
 
 
+# The BM25 index tables are written only by this module and by
+# maintenance.py, always with these columns.  Reading them with a
+# declared schema skips the schema-inference job every inferred read
+# costs, and keeps the ``run_id`` partition column a string however its
+# values look (inference would type an all-digit run id as a number).
+_BM25_SCHEMAS = {
+    "postings": "chunk_id string, term string, tf bigint",
+    "doclen": "chunk_id string, dl bigint, url string",
+    "df": "term string, doc_freq bigint",
+    "stats": "n_docs bigint, sum_dl bigint",
+}
+
+
+def _read_bm25_table(
+    spark: SparkSession, index_dir: str, table: str, name: str | None = None
+) -> DataFrame:
+    """One BM25 index table under its declared schema.  ``name`` picks a
+    snapshot dir (``df_<run>``/``stats_<run>``) or one partition dir
+    (``postings/run_id=<run>``, data columns only); without it the
+    per-run ``postings``/``doclen`` deltas read whole, ``run_id``
+    included.  Indexes older than doclen's ``url`` column read it as
+    null."""
+    schema = _BM25_SCHEMAS[table]
+    if name is None:
+        name = table
+        if table in ("postings", "doclen"):
+            schema += ", run_id string"
+    return spark.read.schema(schema).parquet(os.path.join(index_dir, name))
+
+
+def _bm25_idf_raw(n_docs) -> Column:
+    return F.log(F.lit(float(n_docs)) - F.col("doc_freq") + F.lit(0.5)) - F.log(
+        F.col("doc_freq") + F.lit(0.5)
+    )
+
+
+def bm25_snapshot_summary(
+    spark: SparkSession, index_dir: str, df_name: str, stats_name: str
+) -> dict:
+    """The scalars a probe needs from a df/stats snapshot: ``n_docs``,
+    ``sum_dl`` and ``avg_idf`` (the mean raw idf over the WHOLE
+    vocabulary, for the epsilon floor).  Two single-row jobs; snapshot
+    writers store the result in the pointer under ``"summary"``."""
+    n_docs, sum_dl = _read_bm25_table(spark, index_dir, "stats", stats_name).collect()[0]
+    avg_idf = (
+        _read_bm25_table(spark, index_dir, "df", df_name)
+        .agg(F.avg(_bm25_idf_raw(n_docs)))
+        .collect()[0][0]
+    )
+    return {"n_docs": n_docs, "sum_dl": sum_dl, "avg_idf": avg_idf}
+
+
 def bm25_query_index(
     spark: SparkSession,
     out_dir: str,
@@ -626,29 +683,30 @@ def bm25_query_index(
     Postings/doclen reads are gated to the pointer's committed ``runs``
     (partition pruning on the run_id dir) so orphan deltas from a
     crashed, never-committed run are never scored, and scores always
-    match the df/stats snapshot they were rolled into."""
+    match the df/stats snapshot they were rolled into.
+
+    Building the frame starts no Spark job: the snapshot scalars come
+    from the pointer's ``summary`` and every table is read under its
+    declared schema.  A pointer written before the summary existed
+    falls back to computing it (``bm25_snapshot_summary``)."""
     index_dir = os.path.join(out_dir, "bm25_index")
     current = _bm25_current(index_dir)
     if current is None:
         raise FileNotFoundError(f"no committed BM25 snapshot in {index_dir}")
     committed_runs = current.get("runs")
-    df_tbl = spark.read.parquet(os.path.join(index_dir, current["df"]))
+    df_tbl = _read_bm25_table(spark, index_dir, "df", current["df"])
     # the snapshot scalars (n_docs, sum_dl; avg idf over the WHOLE
-    # vocabulary for the epsilon floor) are single-row aggregates —
-    # collect them as literals instead of threading them through
-    # crossJoin(broadcast(...)) chains (each broadcast is its own job;
-    # measured ~2x the probe's cold wall on tiny snapshots, and at
-    # scale a 1-row collect is the same work as a 1-row broadcast)
-    n_docs, sum_dl = spark.read.parquet(
-        os.path.join(index_dir, current["stats"])
-    ).collect()[0]
-    avgdl = float(sum_dl) / float(n_docs)
-    idf_raw_col = F.log(F.lit(float(n_docs)) - F.col("doc_freq") + F.lit(0.5)) - F.log(
-        F.col("doc_freq") + F.lit(0.5)
+    # vocabulary for the epsilon floor) enter the plan as literals —
+    # threading them through crossJoin(broadcast(...)) chains costs a
+    # job per broadcast.  The pointer carries them, computed once when
+    # the snapshot was written, so no probe re-aggregates the tables.
+    summary = current.get("summary") or bm25_snapshot_summary(
+        spark, index_dir, current["df"], current["stats"]
     )
-    avg_idf = float(
-        df_tbl.agg(F.avg(idf_raw_col)).collect()[0][0]
-    )
+    n_docs = summary["n_docs"]
+    avgdl = float(summary["sum_dl"]) / float(n_docs)
+    avg_idf = float(summary["avg_idf"])
+    idf_raw_col = _bm25_idf_raw(n_docs)
     q = [t.lower() for t in query_terms]
     # idf needed only for the query terms — vocabulary-sized df table
     # never leaves the scan except through this filtered projection
@@ -661,10 +719,10 @@ def bm25_query_index(
             .alias("idf"),
         )
     )
-    postings = spark.read.parquet(os.path.join(index_dir, "postings")).filter(
+    postings = _read_bm25_table(spark, index_dir, "postings").filter(
         F.col("term").isin(q)
     )
-    doclen = spark.read.parquet(os.path.join(index_dir, "doclen"))
+    doclen = _read_bm25_table(spark, index_dir, "doclen")
     if committed_runs is not None:
         postings = postings.filter(F.col("run_id").isin(committed_runs))
         doclen = doclen.filter(F.col("run_id").isin(committed_runs))
@@ -674,14 +732,11 @@ def bm25_query_index(
     # rows and the df/avgdl STATS stay physically untouched (stale)
     # until maintenance.purge_bm25_deletes rewrites them, exactly like
     # deleted docs still counting in Lucene's collection stats until a
-    # segment merge.  Indexes built before the url column exist are
-    # read unmasked (guarded) — rebuild or purge to upgrade.
-    if "url" in doclen.columns:
-        from . import deletes as D
+    # segment merge.  Indexes built before the url column read it as
+    # null, which the anti-join keeps: they stay unmasked until rebuilt.
+    from . import deletes as D
 
-        doclen = D.apply_merge_on_read(
-            doclen, D.deleted_urls(spark, out_dir)
-        )
+    doclen = D.apply_merge_on_read(doclen, D.deleted_urls(spark, out_dir))
     return (
         postings.join(F.broadcast(idf), "term")
         .join(doclen, "chunk_id")
@@ -754,18 +809,17 @@ def run_pipeline(
 
     # ---- checkpoint/resume: anti-join committed doc_hashes (S18) ----
     # counts are only materialized when resume accounting needs them;
-    # otherwise n_input/n_todo come from the metrics aggregation that
-    # runs anyway (one fewer pass over the input)
+    # otherwise n_input/n_todo come from the extracted files' footers
+    # (one fewer pass over the input)
     n_skipped = 0
     n_input = None
-    n_todo = None
     if resume and os.path.exists(extracted_path):
         # manifest-gated: only runs whose manifest committed count as
         # done — a crash after the extracted append but before the chunk
         # write leaves those rows orphaned (no manifest), so their docs
         # are reprocessed here instead of being lost un-chunked forever.
         # One count only (the pre-anti-join input); n_todo comes free
-        # from the metrics aggregation that runs anyway, and n_skipped
+        # from the footers of the files this run appends, and n_skipped
         # is their difference (round-2: two counts = two input scans).
         committed = read_extracted(spark, out_dir)
         if committed is not None:
@@ -847,8 +901,7 @@ def run_pipeline(
     _tick('extract_write')
 
     # ---- dedup audit (reads back only the tiny columns it needs) ----
-    ext = _read_parquet_or_none(spark, extracted_path)
-    if ext is None:
+    if not pre_extract_files and not extracted_file_stats:
         # zero-row run (e.g. empty input or everything resumed-over)
         if n_input is None:
             n_input = prepared.count()
@@ -866,6 +919,18 @@ def run_pipeline(
         with open(os.path.join(manifest_path, f"run_{run_id}.json"), "w") as fh:
             json.dump(manifest, fh, indent=2)
         return manifest
+    # this run's rows, read back from exactly the files it appended under
+    # the schema it wrote them with (no listing of earlier runs' files,
+    # no schema inference; no files reads as empty); the footers already
+    # hold the row counts
+    ext = spark.read.schema(extracted.schema).parquet(
+        *(os.path.join(extracted_path, f["path"]) for f in extracted_file_stats)
+    )
+    n_todo = sum(f["rows"] for f in extracted_file_stats)
+    if n_input is None:
+        n_input = n_todo
+    else:
+        n_skipped = n_input - n_todo
     # audit rows from the NARROW pre-extraction frame — no re-read of the
     # wide extracted table.  Runs as a concurrent job: Spark schedules
     # concurrent jobs from one session, so this small job overlaps the
@@ -895,8 +960,7 @@ def run_pipeline(
     chunker = (routed_chunker() if routed_chunking
                else plain_chunker(chunk_size, chunk_overlap))
     good = (
-        ext.filter(F.col("run_id") == F.lit(run_id))
-        .filter(F.col("error").isNull() & (F.col("text_length") > 0))
+        ext.filter(F.col("error").isNull() & (F.col("text_length") > 0))
         .filter(F.col("is_active"))
         .select("url", "url_bucket", "doc_id",
                 *(["mime"] if routed_chunking else []), "text")
@@ -950,8 +1014,7 @@ def run_pipeline(
 
     # ---- per-partition metrics (REAL timings from the extract stage) ----
     metrics = (
-        ext.filter(F.col("run_id") == F.lit(run_id))
-        .groupBy("part_id")
+        ext.groupBy("part_id")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_parse_failures"),
@@ -964,19 +1027,6 @@ def run_pipeline(
         .withColumn("run_id", F.lit(run_id))
     )
     metrics.write.mode("append").parquet(metrics_path)
-    if n_todo is None:
-        # derive counts from the metrics aggregation instead of a
-        # dedicated pass over the input
-        row = (
-            spark.read.parquet(metrics_path)
-            .filter(F.col("run_id") == F.lit(run_id))
-            .agg(F.sum("n_docs")).collect()[0]
-        )
-        n_todo = int(row[0] or 0)
-        if n_input is None:
-            n_input = n_todo + n_skipped
-        else:
-            n_skipped = n_input - n_todo
     _tick('metrics')
 
     try:
@@ -986,10 +1036,7 @@ def run_pipeline(
     finally:
         pool.shutdown(wait=False)
     _tick('emb_rewrite')
-    n_chunks = (
-        chunks_committed.filter(F.col("run_id") == F.lit(run_id)).count()
-        if chunks_committed is not None else 0
-    )
+    n_chunks = sum(f["rows"] for f in chunks_file_stats)
     _tick('final_count')
     wall = time.monotonic() - t_start
     manifest = {

@@ -39,3 +39,23 @@ def out_dir():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def construction_jobs(spark):
+    """``construction_jobs(build)`` -> the Spark job ids started while
+    ``build()`` returns its DataFrame (a fresh job group per call)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(build):
+        group = f"construct-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "DataFrame construction")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -11,7 +11,9 @@ from pyspark.sql import functions as F
 from clawrag_spark import maintenance as M
 from clawrag_spark.deletes import record_takedown
 from clawrag_spark.pipeline import (
+    _bm25_current,
     bm25_query_index,
+    bm25_snapshot_summary,
     read_chunks,
     run_pipeline,
 )
@@ -35,7 +37,7 @@ def indexed(spark, pages_path, tmp_path_factory):
 
 
 def test_masking_then_purge_equals_fresh_build(
-    spark, indexed, pages_path, tmp_path
+    spark, indexed, pages_path, tmp_path, construction_jobs
 ):
     out = indexed
     before = _scores(spark, out)
@@ -57,6 +59,8 @@ def test_masking_then_purge_equals_fresh_build(
     assert victim_chunks & set(before)
 
     record_takedown(out, [victim])
+    # the delete files are read under their declared schema too
+    assert construction_jobs(lambda: bm25_query_index(spark, out, TERMS)) == []
 
     # -- merge-on-read: masked at query time, stats untouched ---------
     masked = _scores(spark, out)
@@ -72,6 +76,11 @@ def test_masking_then_purge_equals_fresh_build(
     assert res["purged"] and res["n_dead_chunks"] == len(victim_chunks)
     purged = _scores(spark, out)
     assert set(purged) == survivors
+    index_dir = os.path.join(out, "bm25_index")
+    pointer = _bm25_current(index_dir)
+    assert pointer["summary"] == bm25_snapshot_summary(
+        spark, index_dir, pointer["df"], pointer["stats"]
+    )
 
     fresh_out = str(tmp_path / "fresh")
     pages = spark.read.parquet(pages_path)

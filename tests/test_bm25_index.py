@@ -3,13 +3,22 @@ must give the same scores as a from-scratch recompute over the committed
 chunks, and the probe must touch only index tables (no corpus scan).
 """
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from clawrag_spark.operators import retrieval as R
-from clawrag_spark.pipeline import bm25_query_index, read_chunks, run_pipeline
+from clawrag_spark.pipeline import (
+    _bm25_current,
+    _read_bm25_table,
+    bm25_query_index,
+    bm25_snapshot_summary,
+    read_chunks,
+    run_pipeline,
+)
 
 TERMS = ["the", "data", "scale"]
 
@@ -63,12 +72,73 @@ def test_probe_plan_has_no_corpus_scan(spark, indexed_out):
     assert "PushedFilters: [In(term" in plan, plan[:2000]
 
 
+def test_probe_construction_starts_no_job(spark, indexed_out, construction_jobs):
+    assert construction_jobs(lambda: bm25_query_index(spark, indexed_out, TERMS)) == []
+
+
+def test_pointer_summary_matches_tables(spark, indexed_out):
+    index_dir = os.path.join(indexed_out, "bm25_index")
+    pointer = _bm25_current(index_dir)
+    assert pointer["summary"] == bm25_snapshot_summary(
+        spark, index_dir, pointer["df"], pointer["stats"]
+    )
+    doclen = _read_bm25_table(spark, index_dir, "doclen")
+    assert pointer["summary"]["n_docs"] == doclen.count() > 0
+
+
+def test_pointer_without_summary_scores_bitwise_equal(spark, indexed_out, tmp_path):
+    """A pointer written before the summary existed computes the same
+    scalars on the probe, so its scores are bitwise the same."""
+    out = str(tmp_path / "out")
+    shutil.copytree(
+        os.path.join(indexed_out, "bm25_index"), os.path.join(out, "bm25_index")
+    )
+    pointer_path = os.path.join(out, "bm25_index", "_current.json")
+    with open(pointer_path) as fh:
+        pointer = json.load(fh)
+    del pointer["summary"]
+    with open(pointer_path, "w") as fh:
+        json.dump(pointer, fh)
+
+    def scores(o):
+        return {
+            r["chunk_id"]: r["bm25_score"].hex()
+            for r in bm25_query_index(spark, o, TERMS).collect()
+        }
+
+    with_summary = scores(indexed_out)
+    assert with_summary and scores(out) == with_summary
+
+
+def test_all_digit_run_ids(spark, pages_path, tmp_path):
+    """Partition-type inference would read run_id=0042 as a number; the
+    declared schema keeps it a string, and the probe still equals a
+    from-scratch recompute."""
+    out = str(tmp_path / "out")
+    pages = spark.read.parquet(pages_path)
+    run_pipeline(spark, pages.limit(100), out, run_id="0042", bm25_index=True)
+    run_pipeline(spark, pages.limit(200), out, run_id="0100", bm25_index=True)
+    index_dir = os.path.join(out, "bm25_index")
+    assert _bm25_current(index_dir)["runs"] == ["0042", "0100"]
+    postings = _read_bm25_table(spark, index_dir, "postings")
+    assert dict(postings.dtypes)["run_id"] == "string"
+    got = {
+        r["chunk_id"]: r["bm25_score"]
+        for r in bm25_query_index(spark, out, TERMS).collect()
+    }
+    want = {
+        r["chunk_id"]: r["bm25_score"]
+        for r in _scores_full_recompute(spark, out).collect()
+    }
+    assert len(want) > 0 and got.keys() == want.keys()
+    for cid, score in want.items():
+        assert got[cid] == pytest.approx(score, rel=1e-12)
+
+
 def test_orphan_postings_never_scored(spark, indexed_out, tmp_path):
     """Crash anatomy (a): a run that appended postings deltas but never
     reached its manifest/pointer commit must be invisible to the probe —
     reads are gated to the pointer's committed runs."""
-    import shutil
-
     out = str(tmp_path / "out")
     shutil.copytree(indexed_out, out)
     index_dir = os.path.join(out, "bm25_index")

@@ -62,7 +62,9 @@ class TestExpireRuns:
         from clawrag_spark.corpus import write_pages_parquet
         from clawrag_spark.maintenance import expire_runs
         from clawrag_spark.pipeline import (
+            _bm25_current,
             bm25_query_index,
+            bm25_snapshot_summary,
             completed_run_ids,
             read_chunks,
             run_pipeline,
@@ -85,8 +87,14 @@ class TestExpireRuns:
             for r in bm25_query_index(spark, out, terms).collect()
         }
 
+        index_dir = os.path.join(out, "bm25_index")
+        summary_before = _bm25_current(index_dir)["summary"]
         res = expire_runs(spark, out, keep_last=1)
         assert res["expired"] and res["bm25_merged"]
+        pointer = _bm25_current(index_dir)
+        assert pointer["summary"] == summary_before == bm25_snapshot_summary(
+            spark, index_dir, pointer["df"], pointer["stats"]
+        )
         assert res["expired_runs"] == [m["run_id"] for m in manifests[:2]]
 
         # history: exactly [base, last]

@@ -97,6 +97,12 @@ class TestResume:
         # chunks exactly once per chunk_id+url
         ch = spark.read.parquet(os.path.join(out_dir, "chunks"))
         assert ch.count() == ch.select("chunk_id", "url").distinct().count()
+        # each manifest's counts are that run's committed rows
+        ext_rows = dict(ext.groupBy("run_id").count().collect())
+        ch_rows = dict(ch.groupBy("run_id").count().collect())
+        for m in (m1, m2):
+            assert m["n_processed"] == ext_rows[m["run_id"]]
+            assert m["n_chunks"] == ch_rows[m["run_id"]]
 
     def test_metrics_and_manifest(self, spark, pages_path, pipeline_out):
         out, manifest = pipeline_out

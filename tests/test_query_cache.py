@@ -5,9 +5,12 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from clawrag_spark.cache import cached_bm25_query
-from clawrag_spark.pipeline import bm25_query_index, run_pipeline
+from clawrag_spark.deletes import record_takedown
+from clawrag_spark.maintenance import purge_bm25_deletes
+from clawrag_spark.pipeline import bm25_query_index, read_chunks, run_pipeline
 
 TERMS = ["the", "data", "scale"]
 
@@ -50,6 +53,32 @@ def test_query_cache_hits_and_invalidates(spark, pages_path, tmp_path):
     # the stale entry is still on disk under its old key (harmless),
     # the new snapshot key landed alongside
     assert len(os.listdir(os.path.join(out, "query_cache"))) == 3
+
+
+def test_query_cache_tracks_takedown_and_purge(spark, pages_path, tmp_path):
+    """A takedown masks chunks at query time and a purge swaps the
+    df/stats snapshot without changing the run set: both must miss the
+    cache, so the cached result equals the direct one at every step."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, spark.read.parquet(pages_path).limit(150), out,
+                 run_id="r1", bm25_index=True)
+
+    def step():
+        direct = _scores(bm25_query_index(spark, out, TERMS))
+        assert _scores(cached_bm25_query(spark, out, TERMS)) == direct
+        return direct
+
+    before = step()
+    victim = (
+        read_chunks(spark, out).filter(F.col("chunk_id").isin(list(before)))
+        .select("url").first()["url"]
+    )
+    record_takedown(out, [victim])
+    masked = step()
+    assert set(masked) < set(before)
+    assert purge_bm25_deletes(spark, out)["purged"]
+    purged = step()
+    assert purged.keys() == masked.keys() and purged != masked
 
 
 def test_query_cache_requires_snapshot(spark, tmp_path):
