@@ -5801,7 +5801,13 @@ def q_triplet_mining(spark, sf_dir):
     )
     a_ids = np.array([r[0] for r in arows], dtype=np.int64)
     a_lab = np.array([r[1] for r in arows])
-    a_mat = np.array([r[2] for r in arows], dtype=np.float32).astype(np.float64)
+    # reshape keeps an anchorless table (no vec_id % 20 == 0 row) a
+    # (0, 64) matrix, so the kernel runs and returns no rows
+    a_mat = (
+        np.array([r[2] for r in arows], dtype=np.float32)
+        .astype(np.float64)
+        .reshape(len(arows), 64)
+    )
     a_acc = np.zeros(len(arows))
     for i in range(64):
         a_acc = a_acc + a_mat[:, i] * a_mat[:, i]
@@ -5826,6 +5832,9 @@ def q_triplet_mining(spark, sf_dir):
             for i in range(64):
                 c_acc = c_acc + c_mat[:, i] * c_mat[:, i]
             cos = acc / (np.sqrt(c_acc)[:, None] * a_norm[None, :])
+            # a zero-norm vector's cosine is NaN, and argmax would pick
+            # it over the anchor's real best; it never qualifies
+            cos[np.isnan(cos)] = -np.inf
             same = c_lab[:, None] == a_lab[None, :]
             selfm = c_ids[:, None] == a_ids[None, :]
             out = []

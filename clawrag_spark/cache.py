@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .deletes import _committed_delete_files
+from .operators import retrieval as R
 from .pipeline import _bm25_current, bm25_query_index
 
 
@@ -50,9 +51,9 @@ def cached_bm25_query(
     spark: SparkSession,
     out_dir: str,
     query_terms: list[str],
-    k1: float = 1.5,
-    b: float = 0.75,
-    epsilon: float = 0.25,
+    k1: float = R.BM25_K1,
+    b: float = R.BM25_B,
+    epsilon: float = R.BM25_EPSILON,
     cache_dir: str | None = None,
 ) -> DataFrame:
     """``bm25_query_index`` behind a snapshot-keyed result cache.

@@ -458,6 +458,7 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from . import deletes as D
+    from .operators import retrieval as R
     from .pipeline import (
         _bm25_commit_pointer,
         _bm25_current,
@@ -516,12 +517,7 @@ def purge_bm25_deletes(spark: SparkSession, out_dir: str) -> dict:
     if committed_runs is not None:
         post = post.filter(F.col("run_id").isin(committed_runs))
         dl = dl.filter(F.col("run_id").isin(committed_runs))
-    df_new = post.groupBy("term").agg(
-        F.countDistinct("chunk_id").alias("doc_freq")
-    )
-    stats_new = dl.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
+    df_new, stats_new = R.bm25_rollup(post, dl, "chunk_id")
     df_name = f"df_purge_{current.get('run_id', 'x')}_{n_dead}"
     stats_name = f"stats_purge_{current.get('run_id', 'x')}_{n_dead}"
     df_new.write.mode("overwrite").parquet(os.path.join(index_dir, df_name))

@@ -28,11 +28,64 @@ BM25_EPSILON = 0.25
 def sql_tokens(col):
     """SQL-expressible tokenizer: lowercase alnum runs (non-empty).
 
-    This is the oracle-checkable tokenizer; the reference's §-aware
-    tokenizer (bm25_index.py:21-54) is in ``udfs.bm25_tokens`` and used
-    where byte-parity with the reference matters rather than SQL parity.
+    This is the oracle-checkable tokenizer every BM25 path here and in
+    the persisted pipeline index uses.  The reference's §-aware
+    tokenizer (bm25_index.py:21-54) is reproduced as
+    ``udfs.bm25_tokens``, which only the tests exercise; no index is
+    built with it.
     """
     return F.filter(F.split(F.lower(col), "[^a-z0-9]+"), lambda x: x != "")
+
+
+# ---- Okapi BM25, written once.  Every BM25 path in the package (the
+# driver index below, the impact index, the persisted pipeline index
+# and its purge) composes these pieces, so the math has one home.
+
+def bm25_idf_raw(n_docs, doc_freq):
+    """Okapi's raw idf ``ln(N - df + 0.5) - ln(df + 0.5)``; negative for
+    a term in more than half the corpus."""
+    return F.log(n_docs - doc_freq + F.lit(0.5)) - F.log(doc_freq + F.lit(0.5))
+
+
+def bm25_idf_floor(idf_raw, avg_idf, epsilon: float):
+    """rank_bm25's floor: a negative raw idf becomes ``epsilon · avg_idf``
+    (``avg_idf`` = mean raw idf over the whole vocabulary)."""
+    return F.when(idf_raw < 0, F.lit(epsilon) * avg_idf).otherwise(idf_raw)
+
+
+def bm25_contrib(tf, dl, avgdl, idf, k1: float, b: float):
+    """One posting's contribution
+    ``idf · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))``."""
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
+def bm25_tokenize(
+    docs: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``postings(id, term, tf)`` and ``doclen(id, dl)`` of a document
+    frame: one tokenize pass, two hash aggregations with map-side
+    partial combine.  dl = Σ tf is derived from the (small) postings
+    table, so the corpus is tokenized and shuffled exactly once."""
+    tokens = docs.select(
+        F.col(id_col), F.explode(sql_tokens(F.col(text_col))).alias("term")
+    )
+    postings = tokens.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    doclen = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    return postings, doclen
+
+
+def bm25_rollup(
+    postings: DataFrame, doclen: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The collection statistics of a postings/doclen pair:
+    ``df(term, doc_freq)`` and the one-row ``stats(n_docs, sum_dl)``.
+    Both are additive across disjoint document sets, which is what the
+    incremental pipeline index relies on."""
+    df_tbl = postings.groupBy("term").agg(
+        F.countDistinct(id_col).alias("doc_freq")
+    )
+    stats = doclen.agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
+    return df_tbl, stats
 
 
 def bm25_build_index(
@@ -47,8 +100,8 @@ def bm25_build_index(
     Reimplements rank_bm25.BM25Okapi statistics (the engine behind
     bm25_index.py:94-176):
 
-    - ``postings(id, term, tf)`` and ``doclen(id, dl)`` — two hash
-      aggregations with map-side partial combine over one tokenize pass,
+    - ``postings(id, term, tf)`` and ``doclen(id, dl)``
+      (``bm25_tokenize``),
     - ``idf(term, idf, avgdl)`` with ``idf(t) = ln(N - df + 0.5) -
       ln(df + 0.5)`` and negative idfs floored to ``epsilon · avg_idf``
       (corpus mean of the *uncorrected* idf).
@@ -57,31 +110,19 @@ def bm25_build_index(
     (``pipeline.build_bm25_index``) so queries never re-scan the corpus;
     here they are returned lazily so callers can cache or write them.
     """
-    tokens = docs.select(
-        F.col(id_col), F.explode(sql_tokens(F.col(text_col))).alias("term")
-    )
-    postings = tokens.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    # dl = Σ tf — derived from the (small) postings table so the corpus
-    # is tokenized and shuffled exactly once, not once per statistic
-    doclen = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    corpus = doclen.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    df_tbl = postings.groupBy("term").agg(
-        F.countDistinct(id_col).alias("doc_freq")
+    postings, doclen = bm25_tokenize(docs, id_col, text_col)
+    df_tbl, stats = bm25_rollup(postings, doclen, id_col)
+    corpus = stats.select(
+        "n_docs", (F.col("sum_dl") / F.col("n_docs")).alias("avgdl")
     )
     idf_raw = df_tbl.crossJoin(F.broadcast(corpus)).withColumn(
-        "idf_raw",
-        F.log(F.col("n_docs") - F.col("doc_freq") + F.lit(0.5))
-        - F.log(F.col("doc_freq") + F.lit(0.5)),
+        "idf_raw", bm25_idf_raw(F.col("n_docs"), F.col("doc_freq"))
     )
     avg_idf = idf_raw.agg(F.avg("idf_raw").alias("avg_idf"))
     idf = (
         idf_raw.crossJoin(F.broadcast(avg_idf))
         .withColumn(
-            "idf",
-            F.when(F.col("idf_raw") < 0, F.lit(epsilon) * F.col("avg_idf"))
-            .otherwise(F.col("idf_raw")),
+            "idf", bm25_idf_floor(F.col("idf_raw"), F.col("avg_idf"), epsilon)
         )
         .select("term", "doc_freq", "idf", "avgdl")
     )
@@ -109,11 +150,8 @@ def bm25_score_index(
         .join(index["doclen"], id_col)
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (
-                F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+            bm25_contrib(
+                F.col("tf"), F.col("dl"), F.col("avgdl"), F.col("idf"), k1, b
             ),
         )
         .groupBy(id_col)
@@ -187,36 +225,13 @@ def blockmax_topk(
     q = [t.lower() for t in query_terms]
     blocked, bmax = build_block_max(impact_index, id_col, block_size)
     hits = blocked.filter(F.col("term").isin(q))
-    kth = (
-        hits.groupBy(id_col)
-        .agg(F.max("code").alias("mx"))
-        .orderBy(F.desc("mx"), id_col)
-        .limit(k)
-        .agg(F.min("mx").alias("kth_mx"))
-    )
-    neg = hits.groupBy("term").agg(F.min("code").alias("tmin")).agg(
-        F.sum(F.least(F.lit(0), F.col("tmin"))).alias("neg_sum")
-    )
-    theta = kth.crossJoin(neg).select(
-        (F.col("kth_mx") + F.coalesce(F.col("neg_sum"), F.lit(0))).alias("theta")
-    )
     bm_q = bmax.filter(F.col("term").isin(q))
-    cand = (
+    ub = (
         hits.join(F.broadcast(bm_q), ["term", "__blk"])
         .groupBy(id_col)
         .agg(F.sum("block_max").alias("ub"))
-        .crossJoin(F.broadcast(theta))
-        .filter(F.col("ub") >= F.col("theta"))
-        .select(id_col)
     )
-    return (
-        hits.join(cand, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.sum("code").cast("long").alias("impact_score"))
-        .filter(F.col("impact_score") > 0)
-        .orderBy(F.desc("impact_score"), id_col)
-        .limit(k)
-    )
+    return _pruned_topk(hits, ub, id_col, k)
 
 
 def bm25f_scores(
@@ -684,7 +699,6 @@ def build_impact_index(
     BM25 order (recall pinned in pytest); the max contribution maps to
     the top code by construction.
     """
-    tf, dl, avgdl = F.col("tf"), F.col("dl"), F.col("avgdl")
     contrib = (
         index["postings"]
         .join(F.broadcast(index["idf"].select("term", "idf", "avgdl")), "term")
@@ -692,9 +706,8 @@ def build_impact_index(
         .select(
             id_col,
             "term",
-            (
-                F.col("idf") * (tf * (k1 + 1))
-                / (tf + k1 * (1 - b + b * dl / avgdl))
+            bm25_contrib(
+                F.col("tf"), F.col("dl"), F.col("avgdl"), F.col("idf"), k1, b
             ).alias("contrib"),
         )
     )
@@ -800,6 +813,24 @@ def wand_topk(
     """
     q = [t.lower() for t in query_terms]
     hits = impact_index["impacts"].filter(F.col("term").isin(q))
+    tm = impact_index["term_max"].filter(F.col("term").isin(q))
+    ub = (
+        hits.join(F.broadcast(tm), "term")
+        .groupBy(id_col)
+        .agg(F.sum("max_code").alias("ub"))
+    )
+    return _pruned_topk(hits, ub, id_col, k)
+
+
+def _pruned_topk(
+    hits: DataFrame, ub: DataFrame, id_col: str, k: int
+) -> DataFrame:
+    """The lossless pruned top-k shared by ``wand_topk`` and
+    ``blockmax_topk``: ``hits`` are the query terms' impact postings,
+    ``ub(id, ub)`` a per-doc upper bound on the summed codes.  Docs
+    whose bound is below θ_safe (the k-th largest single-term code plus
+    the query terms' negative-code sum) are pruned; the survivors are
+    scored exactly over their full postings."""
     kth = (
         hits.groupBy(id_col)
         .agg(F.max("code").alias("mx"))
@@ -813,12 +844,8 @@ def wand_topk(
     theta = kth.crossJoin(neg).select(
         (F.col("kth_mx") + F.coalesce(F.col("neg_sum"), F.lit(0))).alias("theta")
     )
-    tm = impact_index["term_max"].filter(F.col("term").isin(q))
     cand = (
-        hits.join(F.broadcast(tm), "term")
-        .groupBy(id_col)
-        .agg(F.sum("max_code").alias("ub"))
-        .crossJoin(F.broadcast(theta))
+        ub.crossJoin(F.broadcast(theta))
         .filter(F.col("ub") >= F.col("theta"))
         .select(id_col)
     )

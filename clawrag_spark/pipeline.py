@@ -42,12 +42,13 @@ import time
 import uuid
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import zonemaps
 from .core import oracle
+from .operators import retrieval as R
 from .udfs import chunk_embed, plain_chunker, routed_chunker, sentence_chunker
 
 MAX_PAYLOAD_BYTES = oracle.MAX_PAYLOAD_BYTES
@@ -509,8 +510,6 @@ def build_bm25_index(
     Cost per run is O(new chunks), never a re-scan of the corpus; the
     tiny df/stats tables are the only rewritten artifacts.
     """
-    from .operators.retrieval import sql_tokens
-
     index_dir = os.path.join(out_dir, "bm25_index")
     current = _bm25_current(index_dir)
     pointer_runs: set[str] = set()
@@ -528,20 +527,13 @@ def build_bm25_index(
         delta = chunks.filter(F.col("run_id") == F.lit(rid)).select(
             "chunk_id", "url", "text"
         )
-        tokens = delta.select(
-            "chunk_id", F.explode(sql_tokens(F.col("text"))).alias("term")
-        )
-        postings = tokens.groupBy("chunk_id", "term").agg(F.count("*").alias("tf"))
+        postings, doclen = R.bm25_tokenize(delta, "chunk_id", "text")
         # doclen carries the chunk's url so takedown masking
         # (bm25_query_index) and the physical purge
         # (maintenance.purge_bm25_deletes) never need a chunks scan —
         # one string column on the per-chunk table buys delete support
         # on the query path for a broadcast anti-join
-        doclen = (
-            postings.groupBy("chunk_id")
-            .agg(F.sum("tf").alias("dl"))
-            .join(delta.select("chunk_id", "url"), "chunk_id")
-        )
+        doclen = doclen.join(delta.select("chunk_id", "url"), "chunk_id")
         # per-run partition dirs written with overwrite: a retry after a
         # crash replaces its own delta instead of appending a duplicate
         # (run_id comes back as the partition-discovery column on read)
@@ -553,16 +545,11 @@ def build_bm25_index(
         )
 
     # additive df/stats rollup from the deltas just written
-    df_delta = (
-        _read_bm25_table(spark, index_dir, "postings")
-        .filter(F.col("run_id").isin(todo))
-        .groupBy("term")
-        .agg(F.countDistinct("chunk_id").alias("doc_freq"))
-    )
-    dl_delta = (
-        _read_bm25_table(spark, index_dir, "doclen")
-        .filter(F.col("run_id").isin(todo))
-        .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
+    new_runs = F.col("run_id").isin(todo)
+    df_delta, dl_delta = R.bm25_rollup(
+        _read_bm25_table(spark, index_dir, "postings").filter(new_runs),
+        _read_bm25_table(spark, index_dir, "doclen").filter(new_runs),
+        "chunk_id",
     )
     if current is not None:
         prev_df = _read_bm25_table(spark, index_dir, "df", current["df"])
@@ -577,10 +564,7 @@ def build_bm25_index(
             .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
         )
     else:
-        df_new = df_delta
-        stats_new = dl_delta.select(
-            F.col("n_docs"), F.col("sum_dl")
-        )
+        df_new, stats_new = df_delta, dl_delta
     df_name = f"df_{run_id}"
     stats_name = f"stats_{run_id}"
     df_new.write.mode("overwrite").parquet(os.path.join(index_dir, df_name))
@@ -645,12 +629,6 @@ def _read_bm25_table(
     return spark.read.schema(schema).parquet(os.path.join(index_dir, name))
 
 
-def _bm25_idf_raw(n_docs) -> Column:
-    return F.log(F.lit(float(n_docs)) - F.col("doc_freq") + F.lit(0.5)) - F.log(
-        F.col("doc_freq") + F.lit(0.5)
-    )
-
-
 def bm25_snapshot_summary(
     spark: SparkSession, index_dir: str, df_name: str, stats_name: str
 ) -> dict:
@@ -661,7 +639,7 @@ def bm25_snapshot_summary(
     n_docs, sum_dl = _read_bm25_table(spark, index_dir, "stats", stats_name).collect()[0]
     avg_idf = (
         _read_bm25_table(spark, index_dir, "df", df_name)
-        .agg(F.avg(_bm25_idf_raw(n_docs)))
+        .agg(F.avg(R.bm25_idf_raw(F.lit(float(n_docs)), F.col("doc_freq"))))
         .collect()[0][0]
     )
     return {"n_docs": n_docs, "sum_dl": sum_dl, "avg_idf": avg_idf}
@@ -671,14 +649,15 @@ def bm25_query_index(
     spark: SparkSession,
     out_dir: str,
     query_terms: list[str],
-    k1: float = 1.5,
-    b: float = 0.75,
-    epsilon: float = 0.25,
+    k1: float = R.BM25_K1,
+    b: float = R.BM25_B,
+    epsilon: float = R.BM25_EPSILON,
 ) -> DataFrame:
     """Probe the persisted BM25 index: postings filtered to the query
     terms (parquet predicate pushdown — never a corpus scan), idf from
     the vocabulary-sized df snapshot (broadcast), doclen equi-join.
-    Same math as ``operators.retrieval.bm25_score_index``.
+    Scored by ``operators.retrieval.bm25_score_index`` itself; this
+    function only supplies the committed tables and snapshot scalars.
 
     Postings/doclen reads are gated to the pointer's committed ``runs``
     (partition pruning on the run_id dir) so orphan deltas from a
@@ -706,22 +685,16 @@ def bm25_query_index(
     n_docs = summary["n_docs"]
     avgdl = float(summary["sum_dl"]) / float(n_docs)
     avg_idf = float(summary["avg_idf"])
-    idf_raw_col = _bm25_idf_raw(n_docs)
+    idf_raw = R.bm25_idf_raw(F.lit(float(n_docs)), F.col("doc_freq"))
     q = [t.lower() for t in query_terms]
     # idf needed only for the query terms — vocabulary-sized df table
     # never leaves the scan except through this filtered projection
-    idf = (
-        df_tbl.filter(F.col("term").isin(q))
-        .select(
-            "term",
-            F.when(idf_raw_col < 0, F.lit(epsilon * avg_idf))
-            .otherwise(idf_raw_col)
-            .alias("idf"),
-        )
+    idf = df_tbl.filter(F.col("term").isin(q)).select(
+        "term",
+        R.bm25_idf_floor(idf_raw, F.lit(avg_idf), epsilon).alias("idf"),
+        F.lit(avgdl).alias("avgdl"),
     )
-    postings = _read_bm25_table(spark, index_dir, "postings").filter(
-        F.col("term").isin(q)
-    )
+    postings = _read_bm25_table(spark, index_dir, "postings")
     doclen = _read_bm25_table(spark, index_dir, "doclen")
     if committed_runs is not None:
         postings = postings.filter(F.col("run_id").isin(committed_runs))
@@ -737,19 +710,8 @@ def bm25_query_index(
     from . import deletes as D
 
     doclen = D.apply_merge_on_read(doclen, D.deleted_urls(spark, out_dir))
-    return (
-        postings.join(F.broadcast(idf), "term")
-        .join(doclen, "chunk_id")
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))),
-        )
-        .groupBy("chunk_id")
-        .agg(F.sum("contrib").alias("bm25_score"))
-        .filter(F.col("bm25_score") > 0)
-    )
+    index = {"postings": postings, "doclen": doclen, "idf": idf}
+    return R.bm25_score_index(index, "chunk_id", query_terms, k1, b)
 
 
 def run_pipeline(

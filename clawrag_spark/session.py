@@ -3,6 +3,7 @@ registry of artifacts that live as long as the session."""
 
 from __future__ import annotations
 
+import atexit
 import functools
 import inspect
 import os
@@ -98,6 +99,14 @@ def _drop(key: tuple) -> object:
     if isinstance(value, str):
         shutil.rmtree(value, ignore_errors=True)
     return value
+
+
+@atexit.register
+def _drop_dirs() -> None:
+    """Delete every held scratch directory when the interpreter exits,
+    so a process that never calls ``release()`` leaves none behind."""
+    for key in [k for k, v in _HELD.items() if isinstance(v, str)]:
+        _drop(key)
 
 
 def _sync(spark: SparkSession) -> None:

@@ -33,24 +33,40 @@ def indexed_out(spark, pages_path, tmp_path_factory):
     return out
 
 
-def _scores_full_recompute(spark, out):
+def _scores_full_recompute(spark, out, **params):
     chunks = read_chunks(spark, out).select("chunk_id", "text")
-    return R.bm25_scores(chunks, "chunk_id", "text", TERMS)
+    return R.bm25_scores(chunks, "chunk_id", "text", TERMS, **params)
 
 
-def test_incremental_index_matches_full_recompute(spark, indexed_out):
+# "the" has a negative raw idf in the fixture, so the epsilon floor is
+# exercised at both parameter sets
+@pytest.mark.parametrize(
+    "params",
+    [{}, {"k1": 1.2, "b": 0.5, "epsilon": 0.1}],
+    ids=["defaults", "k1_1.2-b_0.5-eps_0.1"],
+)
+def test_incremental_index_matches_full_recompute(spark, indexed_out, params):
     got = {
         r["chunk_id"]: r["bm25_score"]
-        for r in bm25_query_index(spark, indexed_out, TERMS).collect()
+        for r in bm25_query_index(spark, indexed_out, TERMS, **params).collect()
     }
     want = {
         r["chunk_id"]: r["bm25_score"]
-        for r in _scores_full_recompute(spark, indexed_out).collect()
+        for r in _scores_full_recompute(spark, indexed_out, **params).collect()
     }
     assert len(want) > 0, "vacuous: no positive-score chunks in fixture"
     assert got.keys() == want.keys()
     for cid, score in want.items():
         assert got[cid] == pytest.approx(score, rel=1e-12)
+    index_dir = os.path.join(indexed_out, "bm25_index")
+    pointer = _bm25_current(index_dir)
+    (the_df,) = (
+        _read_bm25_table(spark, index_dir, "df", pointer["df"])
+        .filter(F.col("term") == "the")
+        .select("doc_freq")
+        .first()
+    )
+    assert 2 * the_df > pointer["summary"]["n_docs"], "floor not exercised"
 
 
 def test_snapshot_pointer_and_deltas(spark, indexed_out):

@@ -53,3 +53,29 @@ def test_registry_memoizes_keys_releases_and_prepays(spark, sf_dir, tmp_path):
     attrs = entry._attributes_dir(spark, sf_dir)
     _sync(SimpleNamespace(sparkContext=SimpleNamespace(applicationId="next")))
     assert not os.path.exists(attrs)
+
+
+def test_scratch_dirs_do_not_outlive_the_process(sf_dir):
+    """A process that builds the attribute sidecar and exits without
+    ``release()`` leaves no directory behind."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import os, sys\n"
+        "import __spark_entry__ as entry\n"
+        "from clawrag_spark.session import get_spark\n"
+        "spark = get_spark('atexit-probe', shuffle_partitions=2)\n"
+        "path = entry._attributes_dir(spark, sys.argv[1])\n"
+        "print(path, os.path.isdir(path))\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", script, sf_dir],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    path, existed = done.stdout.split()[-2:]
+    assert existed == "True"
+    assert not os.path.exists(path)
