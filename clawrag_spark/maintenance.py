@@ -1,12 +1,12 @@
 """Table maintenance: small-file compaction.
 
-Every incremental writer in this engine (batch resume appends,
-streaming micro-batch deltas, BM25 postings per-run dirs) trades write
-latency for file count — at 10^12-document scale an un-compacted table
-decays into millions of KB-sized files whose open/footer costs dominate
-scans.  ``compact_parquet_dir`` is the maintenance pass: bin-pack a
-parquet directory into ~``target_file_bytes`` files and swap the result
-in atomically.  It is layout-preserving (all columns, including lineage
+Every incremental writer in this engine (batch resume appends, BM25
+postings per-run dirs) trades write latency for file count — at
+10^12-document scale an un-compacted table decays into millions of
+KB-sized files whose open/footer costs dominate scans.
+``compact_parquet_dir`` is the maintenance pass: bin-pack a parquet
+directory into ~``target_file_bytes`` files and swap the result in
+atomically.  It is layout-preserving (all columns, including lineage
 ``run_id``), so manifest-gated readers (``read_chunks``,
 ``bm25_query_index``) are unaffected.
 

@@ -1096,19 +1096,24 @@ def embedding_near_dups_blocked(
     """Exact embedding-cosine near-dup pairs via block-pair matrix
     multiply — the distributed replacement for the O(N²) crossJoin.
 
-    Same results as ``embedding_near_dups`` (pytest-pinned), different
+    Same pair set as ``embedding_near_dups`` (pytest-pinned), different
     physical plan: rows are assigned to ``n_blocks`` blocks by id, the
     (a ≤ b) block-pair grid becomes cogroup keys, and each task scores
-    one block pair with a numpy float64 loop over dimensions (sequential
-    per-dimension accumulation — bit-identical to the SQL oracle's
-    element-wise sum, unlike BLAS GEMM whose re-associated summation can
-    differ in the last ulp).  Every unordered row pair lands in exactly
-    one block pair, so no dedup pass is needed.
+    one block pair with a float64 GEMM (``A @ B.T`` over the row
+    norms).  A pair is kept when its cosine rounded to 6 dp exceeds
+    ``threshold``, like the SQL oracle's ``round(cos, 6) > t``; GEMM
+    re-associates the dot-product sum, so ``cos_sim`` may differ from an
+    element-wise sum in the last ulp, far inside that 6-dp grid.  Every
+    unordered row pair lands in exactly one block pair, so no dedup pass
+    is needed.
+
+    ``n_blocks`` must be ≥ 1, else ``ValueError``: a block key taken
+    modulo 0 is null and the grid would silently match no pair at all.
 
     Scale: shuffle volume is O(N·n_blocks) vector replicas instead of an
     O(N²) pair stream; per-task work is a dense (N/n_blocks)² kernel in
     numpy instead of interpreted per-pair expressions.  Pick
-    n_blocks ≈ √(desired task count); round-1 bench 36.2 s → ~1 s.
+    n_blocks ≈ √(desired task count).
 
     Works for ANY id type: blocks are assigned by ``pmod(xxhash64(id))``
     (round-2 bug: a ``cast(long)`` block key silently emitted an EMPTY
@@ -1118,6 +1123,8 @@ def embedding_near_dups_blocked(
     pair SET is independent of block assignment (every unordered pair
     lands in exactly one block pair), so the oracle is unaffected.
     """
+    if n_blocks < 1:
+        raise ValueError(f"n_blocks must be >= 1, got {n_blocks}")
     spark = emb.sparkSession
     id_dt = emb.schema[id_col].dataType.simpleString()
     grid = spark.createDataFrame(
@@ -1183,125 +1190,6 @@ def embedding_near_dups_blocked(
 
     return both.groupBy("pa", "pb").applyInPandas(
         score_block_pair, f"id_a {id_dt}, id_b {id_dt}, cos_sim double"
-    )
-
-
-def embedding_near_dups_lsh(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.9,
-    n_bands: int = 16,
-    bits_per_band: int = 8,
-    seed: int = 7,
-    dim: int | None = None,
-) -> DataFrame:
-    """Sign-projection LSH near-dup join — the sub-quadratic path for
-    HIGH similarity thresholds (true near-duplicates).
-
-    Random-hyperplane LSH: ``n_bands × bits_per_band`` seeded Gaussian
-    projections; band key = packed sign bits; candidates = pairs sharing
-    ≥1 band key (equi-join, never all-pairs); exact cosine verify on
-    candidates only.  Collision probability per band is
-    ``(1 − θ/π)^bits``, so recall ≈ 1−(1−p)^bands — at cos ≥ 0.9
-    (θ ≈ 26°) the defaults give ≥ 0.999 recall; at cos ≈ 0.45 recall
-    collapses, which is why the *exact* ``embedding_near_dups_blocked``
-    is the right tool for low thresholds (see round-1 verdict).
-
-    Scale: shuffle is O(N · n_bands) small keys; per-bucket joins are
-    pruned by the 2^bits keyspace.  Deterministic (seeded projections).
-
-    ``dim`` is the embedding width; pass it when known (callers almost
-    always know it) — otherwise ONE driver-side probe job reads a single
-    row to infer it (round-2: an unconditional extra job per call).
-    Any id type works (ids are carried through, grouping key is
-    ``xxhash64``); empty input returns an empty (id_a, id_b, cos_sim)
-    frame instead of crashing.  Candidates come from one posexplode →
-    single self-equi-join on (band, key) — not an n_bands-way union.
-
-    LSH-vs-blocked crossover (measured, sf0.01 embeddings, 500×64-d):
-    at cos≥0.9 LSH generates ~10² candidate pairs vs the blocked plan's
-    ~125k scored cells — LSH wins whenever the threshold is high enough
-    that per-band collision p=(1−θ/π)^bits keeps candidates ≪ N²/2.
-    At cos 0.45 (θ≈63°, p≈0.002) recall collapses and candidates exceed
-    brute force — use ``embedding_near_dups_blocked`` there.
-    """
-    import numpy as np
-
-    if dim is None:
-        dim_row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-        if dim_row is None:
-            spark = emb.sparkSession
-            id_dt = emb.schema[id_col].dataType.simpleString()
-            return spark.createDataFrame(
-                [], f"id_a {id_dt}, id_b {id_dt}, cos_sim double"
-            )
-        dim = int(dim_row["d"])
-    rng = np.random.default_rng(seed)
-    H = rng.standard_normal((dim, n_bands * bits_per_band))
-    thr = float(threshold)
-    nb, bpb = n_bands, bits_per_band
-    id_dt = emb.schema[id_col].dataType.simpleString()
-
-    def band_keys(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as _np
-
-        if pdf.empty:
-            return pd.DataFrame(
-                {"vid": pd.Series(dtype=pdf["vid"].dtype),
-                 "bands": pd.Series(dtype="object")}
-            )
-        V = _np.stack(pdf["vec"].to_numpy()).astype(_np.float64)
-        bits = (V @ H) >= 0
-        keys = _np.packbits(
-            bits.reshape(len(V), nb, bpb), axis=2, bitorder="big"
-        )
-        # collapse possibly-multibyte band keys into one int per band
-        keys = keys.reshape(len(V), nb, -1)
-        kint = _np.zeros((len(V), nb), dtype=_np.int64)
-        for byte in range(keys.shape[2]):
-            kint = (kint << 8) | keys[:, :, byte]
-        return pd.DataFrame(
-            {"vid": pdf["vid"].to_numpy(), "bands": list(kint)}
-        )
-
-    tagged = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    schema = f"vid {id_dt}, bands array<long>"
-    keyed = tagged.withColumn(
-        "g", F.pmod(F.xxhash64(F.col("vid")), F.lit(64))
-    ).groupBy("g").applyInPandas(lambda pdf: band_keys(pdf), schema)
-    exploded = keyed.select(
-        F.col("vid"), F.posexplode("bands").alias("band", "bk")
-    )
-    a = exploded.select(F.col("vid").alias("id_a"), "band", "bk")
-    c = exploded.select(F.col("vid").alias("id_b"), "band", "bk")
-    cand = (
-        a.join(c, ["band", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).cast("array<double>").alias("va"),
-    )
-    vb = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).cast("array<double>").alias("vb"),
-    )
-    from .retrieval import cosine
-
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") > thr)
     )
 
 
@@ -1927,106 +1815,6 @@ def dequantize_int8(codes, scale):
     return F.transform(codes, lambda c: c.cast("double") * scale.cast("double"))
 
 
-def build_pq_index(
-    spark,
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    out_dir: str,
-    m_subspaces: int = 8,
-    k_codes: int = 32,
-    sample_mod: int | None = None,
-) -> dict:
-    """Persist a PQ ANN index: train codebooks, encode every vector,
-    write ``codes`` parquet (id + m int8 codes — the 8 B/vector scan
-    surface) plus a ``codebooks.json`` sidecar (M×K×dsub floats, tiny).
-    Mirrors the pipeline's persisted-BM25 story: build once, probe many
-    times from the artifact without touching float vectors.
-
-    Returns {"n_vectors", "m_subspaces", "k_codes", "dsub"}.
-    """
-    import json
-    import os
-
-    books = pq_train_codebooks(
-        emb, id_col, vec_col, m_subspaces, k_codes, sample_mod=sample_mod
-    )
-    codes = pq_encode(emb, id_col, vec_col, books)
-    os.makedirs(out_dir, exist_ok=True)
-    codes.write.mode("overwrite").parquet(os.path.join(out_dir, "codes"))
-    meta = {
-        "m_subspaces": int(books.shape[0]),
-        "k_codes": int(books.shape[1]),
-        "dsub": int(books.shape[2]),
-        "id_col": id_col,
-        "codebooks": [[list(map(float, c)) for c in sub] for sub in books],
-    }
-    tmp = os.path.join(out_dir, "codebooks.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(out_dir, "codebooks.json"))
-    n = spark.read.parquet(os.path.join(out_dir, "codes")).count()
-    return {"n_vectors": n, **{k: meta[k] for k in ("m_subspaces", "k_codes", "dsub")}}
-
-
-def pq_index_topk(
-    spark,
-    out_dir: str,
-    query_vec: list[float],
-    k: int,
-    rerank: int = 0,
-    emb: DataFrame | None = None,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a persisted PQ index: ADC-score the stored codes against
-    per-subspace lookup tables built from the query, optionally exact
-    re-rank the shortlist against ``emb`` (the float table is touched
-    only for ``rerank`` rows).  Returns (id, cos_sim)."""
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(out_dir, "codebooks.json")) as fh:
-        meta = json.load(fh)
-    books = np.array(meta["codebooks"], dtype=np.float64)
-    id_col = meta["id_col"]
-    m_sub, _, dsub = books.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    lut_ip = np.stack(
-        [books[m] @ q[m * dsub : (m + 1) * dsub] for m in range(m_sub)]
-    )
-    lut_n2 = (books**2).sum(axis=2)
-    qnorm = float(np.sqrt((q**2).sum()))
-    codes = spark.read.parquet(os.path.join(out_dir, "codes"))
-
-    @F.pandas_udf(T.DoubleType())
-    def _adc(codes_col: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        C = _np.array(codes_col.tolist(), dtype=_np.int64)
-        ip = lut_ip[_np.arange(m_sub)[None, :], C].sum(axis=1)
-        n2 = lut_n2[_np.arange(m_sub)[None, :], C].sum(axis=1)
-        return pd.Series(ip / (qnorm * _np.sqrt(_np.maximum(n2, 1e-30))))
-
-    approx = codes.select(F.col(id_col), _adc(F.col("codes")).alias("adc_sim"))
-    if rerank <= 0 or emb is None:
-        return approx.select(
-            F.col(id_col), F.col("adc_sim").alias("cos_sim")
-        ).orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
-    shortlist = approx.orderBy(F.desc("adc_sim"), F.col(id_col)).limit(rerank)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
-    return (
-        emb.join(F.broadcast(shortlist.select(id_col)), id_col)
-        .select(
-            F.col(id_col),
-            cosine(F.col(vec_col).cast("array<double>"), qlit).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def semantic_dedup(
     emb: DataFrame,
     id_col: str,
@@ -2105,8 +1893,7 @@ def minhash_cross_candidates(
     and equi-joins the store on (band, sig).  Returns
     (new_id, committed_id) candidate pairs — verify with the same
     gram-hash Jaccard pass as the batch path, then anti-join flagged
-    new docs out before commit (the streaming decontamination shape,
-    but for self-dup rather than benchmark overlap).
+    new docs out before commit.
 
     Scale: the join is an equi-join on the band signature — at 10^12
     docs the store is bucketed by sig hash, so the probe shuffles only

@@ -61,14 +61,6 @@ def dashboard_counts(df: DataFrame, type_col: str, value_col: str) -> DataFrame:
     )
 
 
-def chunk_stats(chunks: DataFrame, text_col: str = "text") -> DataFrame:
-    """A9: avg chunk size (chunking_comparison.py:88-95)."""
-    return chunks.agg(
-        F.count("*").alias("n_chunks"),
-        F.round(F.avg(F.length(text_col)), 4).alias("avg_chunk_chars"),
-    )
-
-
 def mad_anomalies(
     df: DataFrame,
     key_col: str,

@@ -733,74 +733,6 @@ def core_numbers(
     )
 
 
-def kcore_subgraph(
-    edges: DataFrame,
-    src: str = "src_host",
-    dst: str = "dst_host",
-    k: int = 2,
-    max_iter: int = 100,
-) -> DataFrame:
-    """Nodes of the k-core — the maximal subgraph where every node
-    keeps degree >= k — by synchronous peeling: each round recomputes
-    degrees WITHIN the surviving set and drops every node below k at
-    once.  Dropping all violators per round (instead of one at a time)
-    keeps the loop deterministic and needs rounds bounded by the
-    peeling depth, not |V|.
-
-    Returns (node, degree) for the surviving nodes, ``degree`` being
-    the node's degree inside the k-core.  Empty result when the graph
-    has no k-core.  Raises RuntimeError when ``max_iter`` rounds still
-    shrink the set — on real graphs peeling depth is tens; hitting the
-    cap means the cap, not the graph, is wrong.
-
-    Scale shape per round: one semi-join of the edge set against the
-    surviving nodes (edge rows carry two strings), one degree agg with
-    map-side partials, one driver-visible count.  The edge frame is
-    filtered, never rebuilt, so each round's scan is the persisted
-    symmetric edge set.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    sym.count()
-    live = sym.select(F.col("a").alias("n")).distinct().persist()
-    n_live = live.count()
-    for _ in range(max_iter):
-        kept_edges = sym.join(
-            live.select(F.col("n").alias("a")), "a", "left_semi"
-        ).join(live.select(F.col("n").alias("b")), "b", "left_semi")
-        deg = kept_edges.groupBy(F.col("a").alias("n")).agg(
-            F.count("*").cast("long").alias("degree")
-        )
-        new_live = deg.filter(F.col("degree") >= k).localCheckpoint(
-            eager=False
-        )
-        old_live, live = live, new_live.select("n").persist()
-        n_new = live.count()
-        old_live.unpersist()
-        if n_new == n_live:
-            sym.unpersist()
-            return deg.filter(F.col("degree") >= k).select(
-                "n", "degree"
-            ).withColumnRenamed("n", "node")
-        n_live = n_new
-        if n_new == 0:
-            sym.unpersist()
-            return deg.filter(F.col("degree") >= k).select(
-                F.col("n").alias("node"), "degree"
-            )
-    sym.unpersist()
-    raise RuntimeError(
-        f"kcore_subgraph did not stabilize in {max_iter} rounds"
-    )
-
-
 # ------------------------------------------------- mirror detection
 
 

@@ -1982,10 +1982,9 @@ def snapshot_diff(
     pipeline's Iceberg layout both snapshots are bucketed by
     ``bucket(N, url_hash)``, so the join is storage-partitioned and
     shuffle-free; incremental crawls diff only the buckets whose
-    manifests changed.  This is the batch twin of the streaming
-    exact-dedup operator (``streaming.py``): the same
-    anti-join-on-fingerprint decides "re-extract or skip" for a new
-    crawl against the committed corpus.
+    manifests changed.  The pipeline's resume anti-join makes the
+    same "re-extract or skip" call for a new crawl against the
+    committed corpus.
     """
     o = old.select(
         F.col(key_col).alias("__k"), F.col(fp_col).alias("fp_old")

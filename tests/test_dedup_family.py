@@ -112,29 +112,6 @@ def test_blocked_embedding_near_dup_matches_brute_force(spark, sf_dir):
         assert v == pytest.approx(brute[k], abs=1e-6)
 
 
-def test_lsh_embedding_near_dup_matches_brute_force_on_planted(spark):
-    """High-threshold sign-projection LSH must find every planted
-    near-dup pair (cos ≥ 0.9) that brute force finds."""
-    import numpy as np
-
-    rng = np.random.default_rng(123)
-    base = rng.standard_normal((100, 64))
-    planted = base[:12] + 0.12 * rng.standard_normal((12, 64))  # cos ~0.97
-    vecs = np.vstack([base, planted]).astype(np.float32)
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    brute = {
-        (r["id_a"], r["id_b"])
-        for r in DS.embedding_near_dups(emb, "vec_id", "embedding", 0.9).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in DS.embedding_near_dups_lsh(emb, "vec_id", "embedding", 0.9).collect()
-    }
-    assert len(brute) >= 12, "fixture failed to plant near-dup pairs"
-    assert lsh == brute
-
-
 def test_winnowing_guarantee_and_selectivity(spark):
     """Docs sharing a substring of length ≥ k+w−1 share ≥1 fingerprint;
     winnowing keeps far fewer hashes than all k-grams."""
@@ -332,11 +309,23 @@ def test_blocked_embedding_near_dup_string_ids(spark):
     assert blocked == brute
 
 
-def test_lsh_embedding_near_dup_empty_input(spark):
-    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = DS.embedding_near_dups_lsh(emb, "vec_id", "embedding", 0.9)
-    assert out.columns == ["id_a", "id_b", "cos_sim"]
-    assert out.count() == 0
+@pytest.mark.parametrize("case", ["n_blocks_0", "empty_input"])
+def test_blocked_embedding_near_dup_edge_inputs(spark, case):
+    """``n_blocks < 1`` is rejected (a block key modulo 0 is null, so the
+    grid would silently drop even a cos-1.0 pair); an empty embedding
+    frame gives the (id_a, id_b, cos_sim) columns and no rows."""
+    schema = "vec_id long, embedding array<float>"
+    if case == "n_blocks_0":
+        emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.0])], schema)
+        with pytest.raises(ValueError, match="n_blocks"):
+            DS.embedding_near_dups_blocked(emb, "vec_id", "embedding", n_blocks=0)
+        one = DS.embedding_near_dups_blocked(emb, "vec_id", "embedding", n_blocks=1)
+        assert [(r["id_a"], r["id_b"]) for r in one.collect()] == [(1, 2)]
+    else:
+        emb = spark.createDataFrame([], schema)
+        out = DS.embedding_near_dups_blocked(emb, "vec_id", "embedding", 0.9)
+        assert out.columns == ["id_a", "id_b", "cos_sim"]
+        assert out.count() == 0
 
 
 def test_ann_ivf_multiprobe_recall_with_sampled_training(spark, sf_dir):
@@ -693,31 +682,6 @@ class TestProductQuantization:
         # narrow-probe results are a subset of the probed universe, so
         # each score can never beat the exhaustive winner
         assert all(r["cos_sim"] <= full[0]["cos_sim"] + 1e-12 for r in out)
-
-    def test_persisted_index_matches_direct_pq(self, spark, tmp_path):
-        from clawrag_spark.operators.dataset import (
-            build_pq_index, pq_index_topk, pq_train_codebooks, pq_topk,
-        )
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-        out = str(tmp_path / "pq_index")
-        meta = build_pq_index(spark, emb, "vec_id", "embedding", out, 8, 32)
-        assert meta["n_vectors"] == 500 and meta["dsub"] == 8
-        # probing the artifact == computing from scratch (ADC-only)
-        books = pq_train_codebooks(emb, "vec_id", "embedding", 8, 32)
-        direct = [
-            (r["vec_id"], round(r["cos_sim"], 9))
-            for r in pq_topk(emb, "vec_id", "embedding", books, q, 20).collect()
-        ]
-        from_index = [
-            (r["vec_id"], round(r["cos_sim"], 9))
-            for r in pq_index_topk(spark, out, q, 20).collect()
-        ]
-        assert from_index == direct
-        # exact re-rank path touches the float table only for the shortlist
-        rr = pq_index_topk(spark, out, q, 5, rerank=200, emb=emb).collect()
-        assert rr[0]["vec_id"] == 0 and abs(rr[0]["cos_sim"] - 1.0) < 1e-9
 
 
 def test_cross_candidates_match_full_corpus_cross_pairs(spark, sf_dir):

@@ -137,60 +137,6 @@ class TestCodegen:
         assert "EvalPython" not in plan
 
 
-class TestBucketedJoin:
-    def test_bucketed_join_has_no_exchange(self, spark, tmp_path):
-        """Same-bucketed tables join shuffle-free: the bucketed scans
-        satisfy the join's partitioning requirement, so the sort-merge
-        join plan contains ZERO Exchange operators (the co-located-join
-        contract the 100 TB chunks/parents layout relies on)."""
-        from clawrag_spark.operators.bucketing import bucketed_join, write_bucketed
-
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        left = docs.select("doc_id", "text")
-        right = docs.select("doc_id", "lang", "source")
-        write_bucketed(left, "bkt_left", "doc_id", 8,
-                       path=str(tmp_path / "bkt_left"))
-        write_bucketed(right, "bkt_right", "doc_id", 8,
-                       path=str(tmp_path / "bkt_right"))
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = bucketed_join(spark, "bkt_left", "bkt_right", "doc_id")
-            plan = plan_of(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            assert joined.count() == docs.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.sql("DROP TABLE IF EXISTS bkt_left")
-            spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-    def test_mismatched_bucket_counts_shuffle_one_side(self, spark, tmp_path):
-        """Discipline check: unequal bucket counts reintroduce an
-        Exchange (only on the repartitioned side) — the reason the sink
-        contract pins ONE bucket count per key across tables."""
-        from clawrag_spark.operators.bucketing import bucketed_join, write_bucketed
-
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        write_bucketed(docs.select("doc_id", "text"), "bkt_a", "doc_id", 8,
-                       path=str(tmp_path / "bkt_a"))
-        write_bucketed(docs.select("doc_id", "lang"), "bkt_b", "doc_id", 4,
-                       path=str(tmp_path / "bkt_b"))
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            import re
-
-            plan = plan_of(bucketed_join(spark, "bkt_a", "bkt_b", "doc_id"))
-            # formatted explain names each node twice (tree + details);
-            # count the detail headers, one per physical node
-            assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.sql("DROP TABLE IF EXISTS bkt_a")
-            spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 class TestSkewHandling:
     def test_salted_aggregate_matches_plain(self, spark):
         """Salted two-phase aggregation must equal the plain groupBy for

@@ -1,129 +1,10 @@
-"""Tests: incremental streaming ingestion + multimodal plumbing."""
-
-import os
+"""Tests: multimodal plumbing — media metadata, the image/audio decoders
+and feature stages, perceptual near-dups, EXIF and MP3 headers."""
 
 import numpy as np
 
 import pytest
 from pyspark.sql import functions as F
-
-
-class TestIncrementalStreaming:
-    def test_available_now_exactly_once(self, spark, out_dir, tmp_path):
-        from clawrag_spark.corpus import write_pages_parquet
-        from clawrag_spark.streaming import incremental_extract
-
-        pages_dir = str(tmp_path / "pages_stream")
-        os.makedirs(pages_dir)
-        write_pages_parquet(os.path.join(pages_dir, "batch1.parquet"), 120, seed=7)
-
-        incremental_extract(spark, pages_dir, out_dir)
-        ext_path = os.path.join(out_dir, "extracted_stream")
-        n1 = spark.read.parquet(ext_path).count()
-        assert n1 == 120
-
-        # re-run with no new files: nothing reprocessed
-        incremental_extract(spark, pages_dir, out_dir)
-        assert spark.read.parquet(ext_path).count() == 120
-
-        # drop a second file: only the delta is processed
-        write_pages_parquet(os.path.join(pages_dir, "batch2.parquet"), 80, seed=8)
-        incremental_extract(spark, pages_dir, out_dir)
-        df = spark.read.parquet(ext_path)
-        assert df.count() == 200
-        assert df.select("url").distinct().count() == 200
-
-
-def _write_pages(path, rows):
-    """rows = [(url, ts_datetime)] → pages-schema parquet file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table({
-            "url": pa.array([u for u, _ in rows], pa.string()),
-            "warc_ts": pa.array([t for _, t in rows], pa.timestamp("us")),
-            "html": pa.array([b"<html><body>x</body></html>"] * len(rows), pa.binary()),
-            "text": pa.array([""] * len(rows), pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-        }),
-        path,
-    )
-
-
-class TestWatermarkedWindows:
-    def test_append_mode_emits_closed_windows_and_drops_late(
-        self, spark, out_dir, tmp_path
-    ):
-        from datetime import datetime
-
-        from clawrag_spark.streaming import windowed_host_rates
-
-        t = lambda h, m=0: datetime(2025, 6, 1, h, m)
-        pages_dir = str(tmp_path / "pages_win")
-        os.makedirs(pages_dir)
-        _write_pages(os.path.join(pages_dir, "f1.parquet"), [
-            ("https://a.ex/1", t(0, 5)),
-            ("https://a.ex/2", t(0, 20)),
-            ("https://a.ex/3", t(1, 10)),
-            ("https://b.ex/1", t(0, 30)),
-            ("https://c.ex/1", t(10, 0)),   # clock advancer → watermark 09:00
-        ])
-        windowed_host_rates(spark, pages_dir, out_dir,
-                            window_duration="1 hour", watermark_delay="1 hour")
-        got = {
-            (r["host"], r["window_start"].hour): r["n_docs"]
-            for r in spark.read.parquet(os.path.join(out_dir, "host_rates")).collect()
-        }
-        # windows ending before the 09:00 watermark are final and emitted
-        assert got == {("a.ex", 0): 2, ("a.ex", 1): 1, ("b.ex", 0): 1}
-
-        # second batch: clock advances; a LATE row for hour 0 (behind the
-        # checkpointed watermark) must be dropped, not re-open the window
-        _write_pages(os.path.join(pages_dir, "f2.parquet"), [
-            ("https://a.ex/late", t(0, 40)),
-            ("https://c.ex/2", t(20, 0)),
-        ])
-        windowed_host_rates(spark, pages_dir, out_dir,
-                            window_duration="1 hour", watermark_delay="1 hour")
-        rows = spark.read.parquet(os.path.join(out_dir, "host_rates")).collect()
-        got2 = {(r["host"], r["window_start"].hour): r["n_docs"] for r in rows}
-        assert got2[("c.ex", 10)] == 1          # now final
-        assert got2[("a.ex", 0)] == 2           # late row dropped
-        assert len(rows) == len(got2)           # append mode: no dup windows
-
-
-class TestStatefulSessions:
-    def test_event_time_sessionization(self, spark, out_dir, tmp_path):
-        from datetime import datetime
-
-        from clawrag_spark.streaming import sessionize_hosts
-
-        t = lambda h, m=0: datetime(2025, 6, 1, h, m)
-        pages_dir = str(tmp_path / "pages_sess")
-        os.makedirs(pages_dir)
-        _write_pages(os.path.join(pages_dir, "f1.parquet"), [
-            ("https://a.ex/1", t(0, 0)),
-            ("https://a.ex/2", t(0, 10)),
-            ("https://z.ex/1", t(6, 0)),       # watermark driver
-        ])
-        sessionize_hosts(spark, pages_dir, out_dir, gap_seconds=3600,
-                         watermark_delay="1 hour")
-        sess_path = os.path.join(out_dir, "host_sessions")
-
-        # run 2: clock advances → a.ex's idle session times out (event
-        # time), and z.ex's in-batch gap closes its first session inline
-        _write_pages(os.path.join(pages_dir, "f2.parquet"), [
-            ("https://z.ex/2", t(12, 0)),
-        ])
-        sessionize_hosts(spark, pages_dir, out_dir, gap_seconds=3600,
-                         watermark_delay="1 hour")
-        got = {
-            r["host"]: (r["session_start"], r["session_end"], r["n_docs"])
-            for r in spark.read.parquet(sess_path).collect()
-        }
-        assert got["a.ex"] == (t(0, 0), t(0, 10), 2)
-        assert got["z.ex"] == (t(6, 0), t(6, 0), 1)
 
 
 class TestMultimodal:
@@ -271,128 +152,6 @@ class TestRealDecoders:
             assert got[key] == local_feature(img), f"img {i} pixel mismatch"
 
 
-class TestStreamingIndex:
-    def test_streaming_bm25_index_matches_full_recompute(self, spark, tmp_path):
-        """The stream-maintained BM25 index must score identically to a
-        from-scratch recompute over all streamed chunks, stay unchanged
-        on an empty re-trigger (checkpoint), and fold in late-arriving
-        files incrementally (pointer grows, scores update)."""
-        from clawrag_spark.corpus import generate_pages
-        from clawrag_spark.operators import retrieval as R
-        from clawrag_spark.pipeline import bm25_query_index, _bm25_current
-        from clawrag_spark.streaming import incremental_index_stream
-        import pyarrow.parquet as pq
-
-        terms = ["the", "data", "scale"]
-        pages_dir = tmp_path / "pages"
-        pages_dir.mkdir()
-        out = str(tmp_path / "out")
-        full = generate_pages(240)
-        pq.write_table(full.slice(0, 100), str(pages_dir / "a.parquet"))
-        pq.write_table(full.slice(100, 100), str(pages_dir / "b.parquet"))
-
-        incremental_index_stream(
-            spark, str(pages_dir), out, max_files_per_trigger=1
-        )
-
-        def scores():
-            return {
-                r["chunk_id"]: r["bm25_score"]
-                for r in bm25_query_index(spark, out, terms).collect()
-            }
-
-        def recompute():
-            chunks = spark.read.parquet(os.path.join(out, "chunks")).select(
-                "chunk_id", "text"
-            )
-            return {
-                r["chunk_id"]: r["bm25_score"]
-                for r in R.bm25_scores(chunks, "chunk_id", "text", terms).collect()
-            }
-
-        got, want = scores(), recompute()
-        assert len(want) > 0 and got.keys() == want.keys()
-        for cid, sc in want.items():
-            assert got[cid] == pytest.approx(sc, rel=1e-12)
-        runs_after_two = set(_bm25_current(os.path.join(out, "bm25_index"))["runs"])
-        assert len(runs_after_two) == 2  # one per micro-batch
-
-        # re-trigger with no new files: checkpoint makes it a no-op
-        incremental_index_stream(
-            spark, str(pages_dir), out, max_files_per_trigger=1
-        )
-        assert scores() == got
-
-        # late-arriving file: incremental fold-in
-        pq.write_table(full.slice(200, 40), str(pages_dir / "c.parquet"))
-        incremental_index_stream(
-            spark, str(pages_dir), out, max_files_per_trigger=1
-        )
-        got2, want2 = scores(), recompute()
-        assert got2.keys() == want2.keys() and len(got2) > len(got)
-        for cid, sc in want2.items():
-            assert got2[cid] == pytest.approx(sc, rel=1e-12)
-        assert len(set(_bm25_current(os.path.join(out, "bm25_index"))["runs"])) == 3
-
-
-class TestStreamingDedup:
-    def test_drop_duplicates_within_watermark(self, spark, tmp_path):
-        """Same html under different urls inside the horizon → one
-        survivor; state is watermark-bounded so the stream never holds
-        the full corpus's keys."""
-        import datetime as dt
-
-        from clawrag_spark.streaming import PAGES_SCHEMA, streaming_dedup
-
-        pages_dir = tmp_path / "pages"
-        pages_dir.mkdir()
-        t0 = dt.datetime(2025, 6, 1, 12, 0, 0)
-        dup = b"<html><body>same payload</body></html>"
-        uniq = b"<html><body>other payload</body></html>"
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.table({
-                "url": pa.array(
-                    ["https://a.example.com/1", "https://a.example.com/2",
-                     "https://b.example.com/3"], pa.string()),
-                "warc_ts": pa.array(
-                    [t0, t0 + dt.timedelta(minutes=5),
-                     t0 + dt.timedelta(minutes=10)], pa.timestamp("us")),
-                "html": pa.array([dup, dup, uniq], pa.binary()),
-                "text": pa.array([""] * 3, pa.string()),
-                "lang": pa.array(["en"] * 3, pa.string()),
-            }),
-            str(pages_dir / "b1.parquet"),
-        )
-
-        stream = (
-            spark.readStream.schema(PAGES_SCHEMA)
-            .parquet(str(pages_dir))
-        )
-        out = streaming_dedup(stream, watermark="1 hour")
-        sink = str(tmp_path / "sink")
-        ckpt = str(tmp_path / "ckpt")
-        q = (
-            out.select("url", "doc_hash_pre")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.read.parquet(sink)
-        # 2 distinct payloads survive out of 3 pages
-        assert got.count() == 2
-        assert got.select("doc_hash_pre").distinct().count() == 2
-        # the duplicate kept is a single row for the dup payload
-        urls = {r["url"] for r in got.collect()}
-        assert "https://b.example.com/3" in urls
-        assert len(urls & {"https://a.example.com/1", "https://a.example.com/2"}) == 1
-
-
 class TestPngDecoder:
     """PNG pixel decode is REAL (stdlib zlib + the five filter
     predictors) — reference parity point: extraction_service.py:180-185
@@ -488,78 +247,6 @@ class TestPngDecoder:
         assert len(feat) == FEATURE_DIM
         # every pixel decodes to the (2,0,0) histogram bucket = index 18
         assert abs(feat[18] - 1.0) < 1e-6
-
-
-def _write_pages_txt(path, rows):
-    """rows = [(url, ts, text, lang)] → pages-schema parquet file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table({
-            "url": pa.array([r[0] for r in rows], pa.string()),
-            "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-            "html": pa.array([b""] * len(rows), pa.binary()),
-            "text": pa.array([r[2] for r in rows], pa.string()),
-            "lang": pa.array([r[3] for r in rows], pa.string()),
-        }),
-        path,
-    )
-
-
-class TestStreamingCuration:
-    def test_incremental_funnel_with_cross_run_dedup(
-        self, spark, out_dir, tmp_path
-    ):
-        from datetime import datetime
-
-        from clawrag_spark.streaming import incremental_curate
-
-        t0 = datetime(2025, 6, 1, 12, 0)
-        text_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        text_b = "one two three four five six seven eight nine ten eleven"
-        text_c = "rot gruen blau gelb weiss schwarz lila braun rosa grau"
-        text_d = "fresh words never seen before in any earlier batch here"
-        pages_dir = str(tmp_path / "pages_curate")
-        os.makedirs(pages_dir)
-        _write_pages_txt(os.path.join(pages_dir, "b1.parquet"), [
-            ("https://a.ex/1", t0, text_a, "en"),
-            ("https://a.ex/2", t0, text_a, "en"),     # exact dup in batch
-            ("https://a.ex/3", t0, "short", "en"),    # quality fail
-            ("https://a.ex/4", t0, text_b, "en"),     # benchmark overlap
-            ("https://a.ex/5", t0, text_c, "de"),
-            ("https://a.ex/6", t0, text_c + " x", "zz"),  # lang not in mix
-        ])
-        bench = spark.createDataFrame(
-            [("q1", "one two three four five six seven eight questions")],
-            ["bid", "text"],
-        )
-        kwargs = dict(
-            min_chars=30, max_top_bigram_frac=0.9,
-            benchmark=bench, decontaminate_n=8,
-            mix_rates={"en": 1.0, "de": 1.0}, mix_default_rate=0.0,
-        )
-        incremental_curate(spark, pages_dir, out_dir, **kwargs)
-        curated = os.path.join(out_dir, "curated_stream")
-        kept = {r["url"] for r in spark.read.parquet(curated).collect()}
-        assert kept == {"https://a.ex/1", "https://a.ex/5"}
-        m1 = spark.read.parquet(os.path.join(out_dir, "curation_metrics")).collect()
-        stages = {(r["n_after_dedup"], r["n_quality"],
-                   r["n_decontaminated"], r["n_mix"]) for r in m1}
-        assert (5, 4, 3, 2) in stages
-
-        # run 2: a re-crawl of text_a (dup ACROSS invocations — dedup
-        # state carries through the checkpoint) plus one new doc
-        _write_pages_txt(os.path.join(pages_dir, "b2.parquet"), [
-            ("https://b.ex/1", t0, text_a, "en"),
-            ("https://b.ex/2", t0, text_d, "en"),
-        ])
-        incremental_curate(spark, pages_dir, out_dir, **kwargs)
-        kept2 = {r["url"] for r in spark.read.parquet(curated).collect()}
-        assert kept2 == {"https://a.ex/1", "https://a.ex/5", "https://b.ex/2"}
-        # re-run with no new files: nothing reprocessed
-        incremental_curate(spark, pages_dir, out_dir, **kwargs)
-        assert spark.read.parquet(curated).count() == 3
 
 
 class TestGifDecoder:
@@ -666,73 +353,6 @@ class TestWavDecoder:
         assert mp3_row["duration_sec"] is None  # honest: no mp3 codec
 
 
-class TestStreamingDecontaminate:
-    """Per-micro-batch benchmark RE-READ: a benchmark file that lands
-    between invocations screens later batches without reprocessing
-    earlier ones."""
-
-    def test_benchmark_grows_between_runs(self, spark, out_dir, tmp_path):
-        from datetime import datetime
-
-        from clawrag_spark.streaming import streaming_decontaminate
-
-        t0 = datetime(2025, 6, 1, 12, 0)
-        text_clean = "alpha beta gamma delta epsilon zeta eta theta iota"
-        text_v1hit = "one two three four five six seven eight extra tail"
-        text_v2hit = "red green blue yellow white black purple brown pink"
-        pages_dir = str(tmp_path / "pages_dec")
-        bench_dir = str(tmp_path / "bench_dec")
-        os.makedirs(pages_dir)
-        os.makedirs(bench_dir)
-        _write_pages_txt(os.path.join(pages_dir, "b1.parquet"), [
-            ("https://a.ex/1", t0, text_clean, "en"),
-            ("https://a.ex/2", t0, text_v1hit, "en"),
-            # overlaps only the v2 benchmark doc — clean in run 1
-            ("https://a.ex/3", t0, text_v2hit, "en"),
-        ])
-        spark.createDataFrame(
-            [("q1", "one two three four five six seven eight questions")],
-            ["bid", "text"],
-        ).write.parquet(bench_dir, mode="append")
-
-        streaming_decontaminate(spark, pages_dir, bench_dir, out_dir, n=8)
-        flagged = os.path.join(out_dir, "flagged")
-        clean = os.path.join(out_dir, "clean")
-        assert {r["url"] for r in spark.read.parquet(flagged).collect()} == {
-            "https://a.ex/2"
-        }
-        assert {r["url"] for r in spark.read.parquet(clean).collect()} == {
-            "https://a.ex/1", "https://a.ex/3"
-        }
-
-        # the benchmark GROWS between invocations; a new page overlapping
-        # the new suite must be flagged, and the old clean rows stay put
-        spark.createDataFrame(
-            [("q2", "red green blue yellow white black purple brown quiz")],
-            ["bid", "text"],
-        ).write.parquet(bench_dir, mode="append")
-        _write_pages_txt(os.path.join(pages_dir, "b2.parquet"), [
-            ("https://b.ex/1", t0, text_v2hit, "en"),
-            ("https://b.ex/2", t0, text_clean + " again", "en"),
-        ])
-        streaming_decontaminate(spark, pages_dir, bench_dir, out_dir, n=8)
-        assert {r["url"] for r in spark.read.parquet(flagged).collect()} == {
-            "https://a.ex/2", "https://b.ex/1"
-        }
-        assert {r["url"] for r in spark.read.parquet(clean).collect()} == {
-            "https://a.ex/1", "https://a.ex/3", "https://b.ex/2"
-        }
-        # audit trail records WHICH benchmark snapshot each batch saw
-        metrics = spark.read.parquet(
-            os.path.join(out_dir, "decontam_metrics")
-        ).collect()
-        sizes = sorted(r["n_benchmark"] for r in metrics)
-        assert sizes == [1, 2]
-        # exactly-once: re-run with no new files appends nothing
-        streaming_decontaminate(spark, pages_dir, bench_dir, out_dir, n=8)
-        assert spark.read.parquet(clean).count() == 3
-
-
 class TestJpegCodec:
     """Real baseline JPEG codec: tables from the file's own DQT/DHT."""
 
@@ -807,71 +427,6 @@ class TestJpegCodec:
         )
         assert (row["format"], row["media_type"]) == ("jpeg", "image")
         assert (row["height"], row["width"]) == (21, 18)
-
-
-class TestStreamingNearDedup:
-    """Per-batch MinHash gate against the growing signature store:
-    batch 2's near-copies of batch 1 are rejected with the ACCEPTED
-    url they duplicate; fresh pages pass; the store grows by survivors
-    only."""
-
-    def test_store_grows_and_gates(self, spark, out_dir, tmp_path):
-        from datetime import datetime
-
-        from clawrag_spark.streaming import streaming_near_dedup
-
-        t0 = datetime(2025, 6, 1, 12, 0)
-        base = ("the quick brown fox jumps over the lazy dog and then "
-                "runs far away into the deep dark forest tonight")
-        other = ("completely different words about spark shuffles and "
-                 "parquet row groups and broadcast joins at scale")
-        pages_dir = str(tmp_path / "pages_nd")
-        os.makedirs(pages_dir)
-        _write_pages_txt(os.path.join(pages_dir, "b1.parquet"), [
-            ("https://a.ex/1", t0, base, "en"),
-            # within-batch near-copy: larger url loses to smaller
-            ("https://a.ex/2", t0, base + " exactly", "en"),
-            ("https://a.ex/3", t0, other, "en"),
-        ])
-        streaming_near_dedup(spark, pages_dir, out_dir)
-        acc = os.path.join(out_dir, "accepted")
-        rej = os.path.join(out_dir, "rejected")
-        assert {r["url"] for r in spark.read.parquet(acc).collect()} == {
-            "https://a.ex/1", "https://a.ex/3"
-        }
-        got_rej = {r["url"]: r["dup_of"] for r in spark.read.parquet(rej).collect()}
-        assert got_rej == {"https://a.ex/2": "https://a.ex/1"}
-
-        # batch 2: near-copy of an ACCEPTED batch-1 page -> rejected via
-        # the store; a fresh page passes
-        _write_pages_txt(os.path.join(pages_dir, "b2.parquet"), [
-            ("https://b.ex/1", t0, base + " again", "en"),
-            ("https://b.ex/2", t0, "entirely novel content nine brand "
-                                   "new tokens never seen anywhere", "en"),
-        ])
-        streaming_near_dedup(spark, pages_dir, out_dir)
-        got_rej = {r["url"]: r["dup_of"] for r in spark.read.parquet(rej).collect()}
-        assert got_rej["https://b.ex/1"] == "https://a.ex/1"
-        assert {r["url"] for r in spark.read.parquet(acc).collect()} == {
-            "https://a.ex/1", "https://a.ex/3", "https://b.ex/2"
-        }
-        # rejected urls' signatures never entered the store
-        store_urls = {
-            r["url"]
-            for r in spark.read.parquet(os.path.join(out_dir, "sig_store")).collect()
-        }
-        assert store_urls == {"https://a.ex/1", "https://a.ex/3", "https://b.ex/2"}
-        # metrics audit: batch 2 probed a 2-url store
-        m = {
-            r["batch_id"]: r
-            for r in spark.read.parquet(
-                os.path.join(out_dir, "near_dedup_metrics")
-            ).collect()
-        }
-        assert m[0]["n_store_urls"] == 0 and m[1]["n_store_urls"] == 2
-        # exactly-once: nothing new -> nothing appended
-        streaming_near_dedup(spark, pages_dir, out_dir)
-        assert spark.read.parquet(acc).count() == 3
 
 
 class TestImageNearDup:

@@ -490,41 +490,6 @@ def test_core_numbers_random_graph_matches_reference(spark):
     assert got == _py_core_numbers(pairs)
 
 
-def test_kcore_subgraph_peels_to_the_dense_core(spark):
-    pairs = [
-        ("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
-        ("c", "d"),                         # K4: the 3-core
-        ("d", "p1"), ("p1", "p2"),          # pendant chain
-        ("t1", "t2"), ("t2", "t3"), ("t3", "t1"),   # triangle: 2-core
-    ]
-    df = _edges_df(spark, pairs)
-    got3 = {
-        r.node: r.degree for r in WG.kcore_subgraph(df, k=3).collect()
-    }
-    assert got3 == {"a": 3, "b": 3, "c": 3, "d": 3}
-    got2 = {r.node for r in WG.kcore_subgraph(df, k=2).collect()}
-    assert got2 == {"a", "b", "c", "d", "t1", "t2", "t3"}
-    assert WG.kcore_subgraph(df, k=4).count() == 0
-    with pytest.raises(ValueError):
-        WG.kcore_subgraph(df, k=0)
-
-
-def test_kcore_matches_coreness_thresholding(spark):
-    # k-core membership == {coreness >= k}, on a seeded random graph
-    import random
-
-    rng = random.Random(7)
-    nodes = [f"h{i}" for i in range(30)]
-    pairs = sorted(
-        {tuple(sorted(rng.sample(nodes, 2))) for _ in range(110)}
-    )
-    df = _edges_df(spark, pairs)
-    core = _py_core_numbers(pairs)
-    for k in (1, 2, 3):
-        got = {r.node for r in WG.kcore_subgraph(df, k=k).collect()}
-        assert got == {n for n, c in core.items() if c >= k}
-
-
 # ------------------------------------------------- mirror detection
 
 
