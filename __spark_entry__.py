@@ -1081,17 +1081,13 @@ def q_similarity_join(spark, sf_dir):
     PPJoin family) — the EXACT candidate-generation alternative to
     MinHash-LSH: zero recall loss at Jaccard >= 4/5, candidates found
     through each pair's RAREST shared shingle (global ascending-df token
-    order), verified by the hash-row count-aggregation intersection.
-    All threshold math is integer (4/5 rational), so the DuckDB oracle
-    is bit-identical — no float-boundary drift."""
-    docs = _load(spark, sf_dir, "documents")
+    order: one document-frequency window plus one per-doc sorted
+    aggregate over the session's distinct shingle sets), verified by
+    intersecting the pair's 16-byte md5 hash arrays.  All threshold math
+    is integer (4/5 rational), so the DuckDB oracle is bit-identical —
+    no float-boundary drift."""
     return DS.prefix_filter_similarity_join(
-        docs,
-        "doc_id",
-        "text",
-        threshold_num=4,
-        threshold_den=5,
-        sets=_prefix_sets_cached(spark, sf_dir),
+        _prefix_sets_cached(spark, sf_dir), threshold_num=4, threshold_den=5
     )
 
 
@@ -1103,9 +1099,10 @@ def q_quote_containment(spark, sf_dir):
     id + 1e6) so the relation is non-vacuous at every sf, then runs the
     containment-adapted prefix filter: a's rarest-prefix rows against
     b's FULL shingle rows (LSH can't generate these candidates — band
-    recall decays with the size ratio), hash-row verify, all-integer
-    thresholds.  The oracle is the NAIVE all-pairs computation, so a
-    hash match proves the prefix filter lost nothing."""
+    recall decays with the size ratio), per-pair md5 hash-array
+    verify, all-integer thresholds.  The oracle is the NAIVE all-pairs
+    computation, so a hash match proves the prefix filter lost
+    nothing."""
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.filter(
         F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != F.lit("")
@@ -1127,18 +1124,9 @@ def q_quote_containment(spark, sf_dir):
     # with the 1/37 quote slice's own distinct — the corpus-wide
     # distinct shuffle never re-runs here
     sets = _prefix_sets_cached(spark, sf_dir).unionByName(
-        DS.shingle_rows(quotes, "doc_id", "text")
-        .select(F.col("doc_id").alias("doc"), "shingle")
-        .distinct()
+        DS.shingle_sets(quotes, "doc_id", "text")
     )
-    return DS.containment_join(
-        docs.unionByName(quotes),
-        "doc_id",
-        "text",
-        threshold_num=9,
-        threshold_den=10,
-        sets=sets,
-    )
+    return DS.containment_join(sets, threshold_num=9, threshold_den=10)
 
 
 def q_postings_gaps(spark, sf_dir):

@@ -81,6 +81,17 @@ def shingle_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def shingle_sets(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """DISTINCT (doc, shingle) rows — the input of the prefix-filter
+    set-similarity joins (:func:`prefix_filter_similarity_join`,
+    :func:`containment_join`).  Docs shorter than one shingle drop out."""
+    return (
+        shingle_rows(docs, id_col, text_col)
+        .select(F.col(id_col).alias("doc"), "shingle")
+        .distinct()
+    )
+
+
 def minhash_band_signatures(
     docs: DataFrame,
     id_col: str,
@@ -354,22 +365,109 @@ def minhash_candidate_pairs(
     return cand
 
 
-# ---------------------------------------- prefix-filter similarity join
+# ---------------------------------------- prefix-filter similarity joins
+
+def _rarest_first_docs(sets: DataFrame, num: int, den: int) -> DataFrame:
+    """One row per doc of a DISTINCT (doc, shingle) frame, its shingles
+    in the global rarest-first order (ascending document frequency,
+    then shingle in binary UTF-8 order — one order shared by every
+    partition, so prefix filtering stays exact):
+
+    - ``sz``: |doc|,
+    - ``pre``: the first L+1 ranked shingles, L = sz - ceil(t*sz) + 1
+      the classic prefix length at t = num/den (integer math),
+    - ``shs``: every shingle, ranked,
+    - ``ghs``: ``unhex(md5(shingle))`` per shingle — the 16-byte hash
+      array the verify intersects.
+
+    Two shuffles: the document frequency is a ``count`` window on
+    ``shingle`` (the input is distinct, so it counts docs), and one
+    per-doc aggregate sorts ``(tok_df, shingle)`` structs — a struct
+    sort compares fields in order, exactly ``ORDER BY tok_df, shingle``.
+    """
+    from pyspark.sql import Window
+
+    lst = (
+        sets.select(
+            "doc",
+            "shingle",
+            F.count(F.lit(1)).over(Window.partitionBy("shingle")).alias("tok_df"),
+        )
+        .groupBy("doc")
+        .agg(F.sort_array(F.collect_list(F.struct("tok_df", "shingle"))).alias("lst"))
+    )
+    # bigint: num * size would wrap an int past 2^31
+    pre_len = F.expr(f"size(lst) - ({num}L * size(lst) + {den - 1}) div {den} + 2")
+    return lst.select(
+        "doc",
+        F.size("lst").cast("long").alias("sz"),
+        F.slice(F.col("lst.shingle"), 1, pre_len).alias("pre"),
+        F.col("lst.shingle").alias("shs"),
+        F.transform("lst", lambda s: F.unhex(F.md5(s["shingle"]))).alias("ghs"),
+    )
+
+
+def _side(per: DataFrame, side: str, shingles: str) -> DataFrame:
+    """(doc_<side>, sz_<side>, shingle) rows exploded from a
+    :func:`_rarest_first_docs` array column."""
+    return per.select(
+        F.col("doc").alias(f"doc_{side}"),
+        F.col("sz").alias(f"sz_{side}"),
+        F.explode(shingles).alias("shingle"),
+    )
+
+
+def _attach_intersections(cand: DataFrame, per: DataFrame) -> DataFrame:
+    """``cand`` (doc_a, doc_b, sz_a, sz_b) plus ``inter`` = |a∩b|.
+
+    One row per PAIR carrying both docs' 16-byte hash ARRAYS, attached
+    by two shuffled equi-joins on the doc ids (no corpus broadcast) and
+    intersected in-projection — never the exploded cand ⋈ hash-row join
+    whose intermediate is Σ_cand |a| rows (181M rows / 3.6 GB through
+    the exchange at sf1.0 for the Jaccard join).  Hash sets stay
+    distinct per doc (unhex∘md5 is injective on hex), so
+    size(array_intersect) is exactly |a∩b| up to md5 collisions.
+
+    SHUFFLE_HASH: a sort-merge join would SORT the 1 KB array-payload
+    rows on each attach (measured 232 µs/row); hash-probing streams
+    them through untouched.  The build side is the per-doc array table
+    — corpus-bounded rows, hash-partitioned, never broadcast.
+    """
+    return (
+        cand.join(
+            per.select(F.col("doc").alias("doc_a"), F.col("ghs").alias("gha"))
+            .hint("shuffle_hash"),
+            "doc_a",
+        )
+        .join(
+            per.select(F.col("doc").alias("doc_b"), F.col("ghs").alias("ghb"))
+            .hint("shuffle_hash"),
+            "doc_b",
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "sz_a",
+            "sz_b",
+            F.size(F.array_intersect("gha", "ghb")).alias("inter"),
+        )
+    )
+
 
 def prefix_filter_similarity_join(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
+    sets: DataFrame,
     *,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    shingles: DataFrame | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """All-pairs set-similarity join via prefix filtering — an EXACT
     (zero-recall-loss) alternative to MinHash-LSH candidate generation
     (AllPairs/PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08)
     for thresholds t = threshold_num/threshold_den > 1/3.
+
+    ``sets`` is a DISTINCT (doc, shingle) frame — :func:`shingle_sets`
+    builds it from documents.  Returns (doc_a, doc_b, jaccard) with
+    doc_a < doc_b.
 
     Precondition (raises ``ValueError`` otherwise): ``threshold_den > 0``
     and ``3 * threshold_num > threshold_den``.  The candidate filter
@@ -390,64 +488,22 @@ def prefix_filter_similarity_join(
     verify `den*inter >= num*union`) — bit-identical across engines,
     no float-boundary drift against the DuckDB oracle.
 
-    Scale shape (one pass each):
-    - distinct (doc, shingle) rows: scan-side explode,
-    - token document frequencies: one groupBy(shingle) shuffle
-      (map-side partial count),
-    - rarest-first rank: join df onto the rows (shuffle on shingle),
-      then one row_number window per doc,
+    Scale shape:
+    - rarest-first rank: :func:`_rarest_first_docs` — one document-
+      frequency window shuffle on shingle, one per-doc sorted aggregate,
     - candidates: prefix-row self-equi-join on shingle + the length
       filter den*min(|a|,|b|) >= num*max(|a|,|b|) — never all pairs;
       prefixes are ~(1-t)*|d| tokens so the join input is a fifth of
       the corpus at t=0.8,
-    - verify: the hash-row count-aggregation intersection (16-byte md5
-      rows through the shuffle, NEVER whole gram arrays per pair — the
-      same scale rule as ``_jaccard_verified_pairs``).
-
-    Pass a cached :func:`shingle_rows` frame via ``shingles`` to share
-    the tokenize+explode scan with other consumers.
+    - verify: :func:`_attach_intersections` — per-pair 16-byte hash
+      arrays, ``size(array_intersect)``.
     """
     if threshold_den <= 0 or 3 * threshold_num <= threshold_den:
         raise ValueError(
             "prefix_filter_similarity_join is exact only for thresholds "
             f"above 1/3, got {threshold_num}/{threshold_den}"
         )
-    if sets is not None:
-        # caller-provided DISTINCT (doc, shingle) frame (already
-        # materialized) — shared across the set-similarity queries
-        sets = sets.select(F.col("doc"), "shingle")
-    else:
-        if shingles is None:
-            shingles = shingle_rows(docs, id_col, text_col)
-        # the distinct (doc, shingle) frame feeds FOUR consumers (sizes,
-        # document frequencies, the ranked prefix, and both verify sides) —
-        # persist + materialize EAGERLY per the repo's fork-then-cache rule
-        # or the tokenize+explode+distinct subtree re-runs per consumer
-        # (measured: 11.0 s → 4.2 s at sf0.1).  Session-scoped cache, same
-        # lifecycle as _jaccard_verified_pairs' shingle cache.
-        sets = (
-            shingles.select(F.col(id_col).alias("doc"), "shingle")
-            .distinct()
-            .persist()
-        )
-        sets.count()
-    sizes = sets.groupBy("doc").agg(F.count("*").alias("sz"))
-    dfreq = sets.groupBy("shingle").agg(F.count("*").alias("tok_df"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc").orderBy("tok_df", "shingle")
-    ranked = (
-        sets.join(dfreq, "shingle")
-        .join(sizes, "doc")
-        .select(
-            "doc", "shingle", "sz", F.row_number().over(w).alias("rn")
-        )
-    )
-    prefix_len = (
-        F.col("sz")
-        - F.expr(f"({threshold_num} * sz + {threshold_den - 1}) div {threshold_den}")
-        + F.lit(1)
-    )
+    per = _rarest_first_docs(sets, threshold_num, threshold_den)
     # Extended prefixes (classic length + 1) for the multi-witness
     # filter below: for Jaccard >= t the overlap is >= ceil(t*sz_a), so
     # the SECOND-rarest shared token g2 has at most
@@ -461,17 +517,9 @@ def prefix_filter_similarity_join(
     # >= 2 removes the coincidental single-shared-shingle fan-out
     # before the verify — exact, zero recall loss (the count replaces
     # the same-shuffle `.distinct()`).
-    prefix = ranked.filter(F.col("rn") <= prefix_len + 1).select(
-        "doc", "shingle", "sz"
-    )
-    pa = prefix.select(
-        F.col("doc").alias("doc_a"), "shingle", F.col("sz").alias("sz_a")
-    )
-    pb = prefix.select(
-        F.col("doc").alias("doc_b"), "shingle", F.col("sz").alias("sz_b")
-    )
     cand = (
-        pa.join(pb, "shingle")
+        _side(per, "a", "pre")
+        .join(_side(per, "b", "pre"), "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(
             F.lit(threshold_den) * F.least("sz_a", "sz_b")
@@ -482,44 +530,9 @@ def prefix_filter_similarity_join(
         .filter((F.col("__wit") >= 2) | (F.least("sz_a", "sz_b") < 2))
         .select("doc_a", "doc_b", "sz_a", "sz_b")
     )
-    # Verify: |a∩b| per candidate pair.  r6 shape: one row per PAIR
-    # carrying both docs' 16-byte-binary hash ARRAYS (two shuffled
-    # equi-joins on the doc ids — no corpus broadcast), intersected
-    # in-projection — replaces the exploded cand⋈hash-row join whose
-    # intermediate was Σ_cand |a| rows (measured 181M rows / 3.6 GB
-    # through the exchange at sf1.0; same total bytes now travel as
-    # 3.1M wide rows, and the 181M-row count aggregation disappears).
-    # Hash-set distinctness per doc is preserved (unhex∘md5 is
-    # injective on hex), so size(array_intersect) is exactly |a∩b|
-    # under the same md5-collision-freeness the old count relied on.
-    gharr = sets.groupBy("doc").agg(
-        F.collect_list(F.unhex(F.md5("shingle"))).alias("ghs")
-    )
-    # SHUFFLE_HASH: a sort-merge join would SORT the 1 KB array-payload
-    # rows on each attach (measured 232 µs/row); hash-probing streams
-    # them through untouched.  The build side is the per-doc array
-    # table — corpus-bounded rows, hash-partitioned, never broadcast.
-    inter = (
-        cand.select("doc_a", "doc_b")
-        .join(
-            gharr.select(F.col("doc").alias("doc_a"), F.col("ghs").alias("gha"))
-            .hint("shuffle_hash"),
-            "doc_a",
-        )
-        .join(
-            gharr.select(F.col("doc").alias("doc_b"), F.col("ghs").alias("ghb"))
-            .hint("shuffle_hash"),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("gha", "ghb")).alias("inter"),
-        )
-    )
     union_sz = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     return (
-        cand.join(inter, ["doc_a", "doc_b"])
+        _attach_intersections(cand, per)
         .filter(F.lit(threshold_den) * F.col("inter") >= F.lit(threshold_num) * union_sz)
         .select(
             "doc_a",
@@ -529,17 +542,11 @@ def prefix_filter_similarity_join(
     )
 
 
-# ------------------------------------------------------------- SimHash
-
 def containment_join(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
+    sets: DataFrame,
     *,
     threshold_num: int = 9,
     threshold_den: int = 10,
-    shingles: DataFrame | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact set-CONTAINMENT join for t > 1/2: ordered pairs (a, b) with
     C(a, b) = |shingles(a) ∩ shingles(b)| / |shingles(a)| >= t — the
@@ -548,6 +555,9 @@ def containment_join(
     ~ 1; SlimPajama-style pipelines drop the contained copy, and
     MinHash-LSH cannot generate these candidates because banding
     recall decays with the SIZE RATIO, not the overlap).
+
+    ``sets`` is a DISTINCT (doc, shingle) frame — :func:`shingle_sets`
+    builds it from documents.
 
     Prefix filtering adapted to containment (zero recall loss): if
     C(a,b) >= t then a must share a shingle with b inside a's first
@@ -561,13 +571,13 @@ def containment_join(
     all-pairs computation, so an oracle match PROVES the prefix
     filter lost nothing.
 
-    Scale shape: the same one-pass frames as
-    :func:`prefix_filter_similarity_join` (distinct rows, sizes,
-    document frequencies, rarest-first rank), then prefix(a) ⋈ full(b)
-    on the shingle key — prefix tokens are each doc's rarest, so the
-    fan-out per row is the LOW tail of the df distribution — and the
-    hash-row count-aggregation verify (16-byte md5 rows through the
-    shuffle, never gram arrays per pair).
+    Scale shape: the rarest-first rank of
+    :func:`prefix_filter_similarity_join` (:func:`_rarest_first_docs`,
+    whose per-doc rows also carry b's full ranked list), then
+    prefix(a) ⋈ full(b) on the shingle key — prefix tokens are each
+    doc's rarest, so the fan-out per row is the LOW tail of the df
+    distribution — and the same per-pair hash-array verify
+    (:func:`_attach_intersections`).
 
     Precondition (raises ``ValueError`` otherwise): ``threshold_den > 0``
     and ``2 * threshold_num > threshold_den``.  The candidate filter
@@ -584,32 +594,7 @@ def containment_join(
             "containment_join is exact only for thresholds above 1/2, "
             f"got {threshold_num}/{threshold_den}"
         )
-    if sets is not None:
-        sets = sets.select(F.col("doc"), "shingle")
-    else:
-        if shingles is None:
-            shingles = shingle_rows(docs, id_col, text_col)
-        sets = (
-            shingles.select(F.col(id_col).alias("doc"), "shingle")
-            .distinct()
-            .persist()
-        )
-        sets.count()  # fork rule: sizes, dfreq, prefix, both verify sides
-    sizes = sets.groupBy("doc").agg(F.count("*").alias("sz"))
-    dfreq = sets.groupBy("shingle").agg(F.count("*").alias("tok_df"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc").orderBy("tok_df", "shingle")
-    ranked = (
-        sets.join(dfreq, "shingle")
-        .join(sizes, "doc")
-        .select("doc", "shingle", "sz", F.row_number().over(w).alias("rn"))
-    )
-    prefix_len = (
-        F.col("sz")
-        - F.expr(f"({threshold_num} * sz + {threshold_den - 1}) div {threshold_den}")
-        + F.lit(1)
-    )
+    per = _rarest_first_docs(sets, threshold_num, threshold_den)
     # Multi-witness (prefix-count / CPMerge-style) candidate filter —
     # exact, zero recall loss: a qualifying pair misses at most
     # sz_a − ceil(t·sz_a) = L−1 of a's tokens from b, so among a's
@@ -621,14 +606,9 @@ def containment_join(
     # single-coincidental-shared-shingle fan-out (measured 13.1M → the
     # verified tail at sf1.0) before any verify work; the count
     # replaces the same-shuffle `.distinct()`.
-    pa = ranked.filter(F.col("rn") <= prefix_len + 1).select(
-        F.col("doc").alias("doc_a"), "shingle", F.col("sz").alias("sz_a")
-    )
-    full_b = sets.join(sizes, "doc").select(
-        F.col("doc").alias("doc_b"), "shingle", F.col("sz").alias("sz_b")
-    )
     cand = (
-        pa.join(full_b, "shingle")
+        _side(per, "a", "pre")
+        .join(_side(per, "b", "shs"), "shingle")
         .filter(F.col("doc_a") != F.col("doc_b"))
         .filter(
             F.lit(threshold_den) * F.col("sz_b")
@@ -639,38 +619,8 @@ def containment_join(
         .filter((F.col("__wit") >= 2) | (F.col("sz_a") < 2))
         .select("doc_a", "doc_b", "sz_a", "sz_b")
     )
-    # r6 verify shape: per-pair binary-hash-array attach +
-    # size(array_intersect) — see prefix_filter_similarity_join; the
-    # containment candidate set is larger (a-prefix × b-FULL), so the
-    # exploded verify was Σ_cand |a| = 775M rows / 11.5 GB through the
-    # exchange at sf1.0, now 14.4M pair rows.
-    gharr = sets.groupBy("doc").agg(
-        F.collect_list(F.unhex(F.md5("shingle"))).alias("ghs")
-    )
-    # SHUFFLE_HASH: a sort-merge join would SORT the 1 KB array-payload
-    # rows on each attach (measured 232 µs/row); hash-probing streams
-    # them through untouched.  The build side is the per-doc array
-    # table — corpus-bounded rows, hash-partitioned, never broadcast.
-    inter = (
-        cand.select("doc_a", "doc_b")
-        .join(
-            gharr.select(F.col("doc").alias("doc_a"), F.col("ghs").alias("gha"))
-            .hint("shuffle_hash"),
-            "doc_a",
-        )
-        .join(
-            gharr.select(F.col("doc").alias("doc_b"), F.col("ghs").alias("ghb"))
-            .hint("shuffle_hash"),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("gha", "ghb")).alias("inter"),
-        )
-    )
     return (
-        cand.join(inter, ["doc_a", "doc_b"])
+        _attach_intersections(cand, per)
         .filter(
             F.lit(threshold_den) * F.col("inter")
             >= F.lit(threshold_num) * F.col("sz_a")
@@ -685,6 +635,8 @@ def containment_join(
         )
     )
 
+
+# ------------------------------------------------------------- SimHash
 
 def simhash64_py(t: str | None) -> int:
     """Reference scalar SimHash (shared oracle for tests): md5(token) →

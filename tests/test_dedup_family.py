@@ -37,6 +37,12 @@ def _mk_docs(n=90, seed=11):
     return docs
 
 
+def _shingle_set(text):
+    """Brute-force 3-token shingle set (the fixtures are lowercase words)."""
+    toks = [t for t in text.lower().split() if t]
+    return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+
 def _hamming(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
@@ -219,15 +225,11 @@ def test_prefix_filter_join_equals_brute_force(spark):
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in DS.prefix_filter_similarity_join(
-            sdf, "doc_id", "text", threshold_num=4, threshold_den=5
+            DS.shingle_sets(sdf, "doc_id", "text"), threshold_num=4, threshold_den=5
         ).collect()
     }
 
-    def shingle_set(text):
-        toks = [t for t in text.lower().split() if t]
-        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-
-    sets = {i: shingle_set(t) for i, t in docs}
+    sets = {i: _shingle_set(t) for i, t in docs}
     want = {}
     ids = sorted(sets)
     for i, a in enumerate(ids):
@@ -785,13 +787,12 @@ def test_containment_catches_quotes_jaccard_misses(spark):
     docs = spark.createDataFrame(
         [(1, parent), (2, quote), (3, other)], ["doc_id", "text"]
     )
+    sets = DS.shingle_sets(docs, "doc_id", "text")
     jac = prefix_filter_similarity_join(
-        docs, "doc_id", "text", threshold_num=4, threshold_den=5
+        sets, threshold_num=4, threshold_den=5
     ).collect()
     assert jac == []
-    got = containment_join(
-        docs, "doc_id", "text", threshold_num=9, threshold_den=10
-    ).collect()
+    got = containment_join(sets, threshold_num=9, threshold_den=10).collect()
     assert len(got) == 1
     r = got[0]
     # 20 tokens -> 18 shingles, all inside the parent's 98
@@ -821,11 +822,75 @@ def test_containment_threshold_is_integer_exact(spark):
     got = {
         (r["doc_a"], r["doc_b"]): r["inter"]
         for r in containment_join(
-            docs, "doc_id", "text", threshold_num=9, threshold_den=10
+            DS.shingle_sets(docs, "doc_id", "text"),
+            threshold_num=9,
+            threshold_den=10,
         ).collect()
     }
     assert (2, 1) in got and got[(2, 1)] == 9
     assert (3, 1) not in got
+
+
+def test_containment_join_equals_brute_force(spark):
+    """Containment >= 9/10 is EXACT on a corpus with near-copies and
+    planted half-doc quotes (every 10th doc's first 20 tokens, id +
+    1000): membership and every output column equal the naive
+    all-ordered-pairs computation."""
+    docs = _mk_docs(n=120, seed=23)
+    docs += [(1000 + i, " ".join(t.split()[:20])) for i, t in docs if i % 10 == 0]
+    sdf = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        (r.doc_a, r.doc_b): (r.sz_a, r.sz_b, r.inter, r.containment)
+        for r in DS.containment_join(
+            DS.shingle_sets(sdf, "doc_id", "text"), threshold_num=9, threshold_den=10
+        ).collect()
+    }
+    sets = {i: _shingle_set(t) for i, t in docs}
+    want = {}
+    for a, sa in sets.items():
+        for b, sb in sets.items():
+            inter = len(sa & sb)
+            if a != b and 10 * inter >= 9 * len(sa):
+                want[(a, b)] = (len(sa), len(sb), inter, round(inter / len(sa), 6))
+    assert sum(1 for a, _ in want if a >= 1000) >= 12, "quotes not planted"
+    assert sum(1 for a, b in want if a < 1000 and b < 1000) >= 3
+    assert got == want
+
+
+def test_set_similarity_joins_edge_inputs(spark):
+    """Empty input gives 0 rows with the documented columns; a doc with
+    fewer than 3 tokens has no shingle and drops out of both joins even
+    when it duplicates another short doc."""
+    empty = DS.shingle_sets(
+        spark.createDataFrame([], "doc_id long, text string"), "doc_id", "text"
+    )
+    jac = DS.prefix_filter_similarity_join(empty)
+    con = DS.containment_join(empty)
+    assert jac.columns == ["doc_a", "doc_b", "jaccard"]
+    assert con.columns == ["doc_a", "doc_b", "sz_a", "sz_b", "inter", "containment"]
+    assert jac.collect() == [] and con.collect() == []
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, "a b"), (3, "x y z w"), (4, "x y z w")],
+        ["doc_id", "text"],
+    )
+    sets = DS.shingle_sets(docs, "doc_id", "text")
+    assert [(r.doc_a, r.doc_b) for r in DS.prefix_filter_similarity_join(sets).collect()] == [(3, 4)]
+    assert sorted(
+        (r.doc_a, r.doc_b) for r in DS.containment_join(sets).collect()
+    ) == [(3, 4), (4, 3)]
+
+
+def test_set_similarity_joins_persist_nothing(spark):
+    """The joins build one lazy plan over their input: collecting them
+    leaves no persisted frame behind."""
+    docs = spark.createDataFrame(_mk_docs(n=30, seed=5), ["doc_id", "text"])
+    sets = DS.shingle_sets(docs, "doc_id", "text")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    DS.prefix_filter_similarity_join(sets).collect()
+    DS.containment_join(sets).collect()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 @pytest.mark.parametrize(
@@ -844,7 +909,9 @@ def test_witness_filter_thresholds_rejected(spark, join, num, den):
     docs = spark.createDataFrame([(1, "a b c"), (2, "c d e")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="exact only"):
         getattr(DS, join)(
-            docs, "doc_id", "text", threshold_num=num, threshold_den=den
+            DS.shingle_sets(docs, "doc_id", "text"),
+            threshold_num=num,
+            threshold_den=den,
         )
 
 

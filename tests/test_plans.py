@@ -23,6 +23,48 @@ def plan_of(df) -> str:
     )
 
 
+def shuffle_outputs(df) -> list[dict]:
+    """Collect ``df``, then walk its executed physical plan (adaptive
+    query stages included) and return every ShuffleExchangeExec's output
+    columns as {name: type}."""
+    df.collect()
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if kind == "ShuffleExchangeExec":
+            attrs = node.output()
+            out.append(
+                {
+                    attrs.apply(i).name(): attrs.apply(i).dataType().simpleString()
+                    for i in range(attrs.size())
+                }
+            )
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def assert_pair_exchanges_carry_hashes(df) -> None:
+    """Every per-pair exchange (one holding doc_a and doc_b) carries the
+    docs' 16-byte md5 hashes as array<binary>, never a shingle string
+    array or the ranked struct list (the 100 TB shuffle-volume rule)."""
+    pair_exchanges = [
+        cols for cols in shuffle_outputs(df) if {"doc_a", "doc_b"} <= cols.keys()
+    ]
+    assert pair_exchanges
+    for cols in pair_exchanges:
+        for name, dtype in cols.items():
+            assert not dtype.startswith(("array<string>", "array<struct")), (name, dtype)
+    assert any("array<binary>" in cols.values() for cols in pair_exchanges)
+
+
 class TestPushdownPruning:
     def test_filter_pushed_to_scan(self, spark):
         df = entry_mod.q_token_counts(spark, SF_DIR)  # doc_id < 100
@@ -490,14 +532,21 @@ class TestSessionAdditionPlans:
         assert "EvalPython" not in plan
 
     def test_similarity_join_verify_shuffles_hashes_not_arrays(self, spark):
-        # the verify-side exchanges must carry md5 gram hashes, never a
-        # gram ARRAY column (the 100 TB shuffle-volume rule the hash-row
-        # Jaccard verify established)
-        plan = plan_of(entry_mod.q_similarity_join(spark, SF_DIR))
-        for ex in re.finditer(r"\(\d+\) Exchange\n(?:.+\n)+?Arguments.*", plan):
-            seg = ex.group(0)
-            if "gh#" in seg:
-                assert "array<" not in seg.lower()
+        assert_pair_exchanges_carry_hashes(entry_mod.q_similarity_join(spark, SF_DIR))
+
+    def test_quote_containment_verify_shuffles_hashes_not_arrays(self, spark):
+        assert_pair_exchanges_carry_hashes(entry_mod.q_quote_containment(spark, SF_DIR))
+
+    @pytest.mark.parametrize(
+        "query, budget", [("q_similarity_join", 11), ("q_quote_containment", 14)]
+    )
+    def test_set_similarity_warm_job_budget(self, spark, construction_jobs, query, budget):
+        # one warm build + collect at sf0.001: the rarest-first rank is
+        # one window + one per-doc aggregate shared by the candidate
+        # join and both verify attaches (29 and 28 jobs before it)
+        fn = getattr(entry_mod, query)
+        fn(spark, SF_DIR).collect()
+        assert len(construction_jobs(lambda: fn(spark, SF_DIR).collect())) <= budget
 
     def test_registered_domains_no_join_single_scan(self, spark):
         plan = plan_of(entry_mod.q_registered_domains(spark, SF_DIR))
